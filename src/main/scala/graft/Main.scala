@@ -5,14 +5,13 @@ import org.apache.spark.sql.SparkSession
 import graft.conf.GraftConfig
 import graft.core.GraftSession
 import graft.extract._
-import graft.sources.Tables
 
 /** Config-driven CLI entry point — the reference's operational
   * surface (main.py:28-140 + config.yaml.example): a YAML file names
   * the source, tables, sizing knobs, target URI and dataset; this
-  * main wires it into ExtractJob (introspect → plan → extract
-  * json.gz → reconcile → state) and the Warehouse load stage
-  * (dataset create/update, dispositions, labels, rows_loaded check).
+  * main creates the target dataset and wires it into ExtractJob
+  * (introspect → plan → extract json.gz → warehouse load →
+  * reconcile on rows_loaded → state), then applies the post-labels.
   *
   * Usage:
   *   graft.Main --config graft.yaml [uri] [dataset] [--drop] [--parse]
@@ -77,14 +76,33 @@ object Main {
 
   /** The full ELT flow for a parsed config; returns per-table state.
     * Separated from `main` so tests can drive it with an existing
-    * session.
+    * session. As in the reference (main.py:170-250 + gcp.py), the
+    * dataset is created with its pre-labels before any table is
+    * extracted; each table then loads inside ExtractJob's pipeline as
+    * soon as its own extract is done, and reconciles on the rows the
+    * warehouse writer observed. A table whose `rows_loaded` differs
+    * from its introspected rows comes back as a failure, and the
+    * post-labels are applied only once every table has loaded and
+    * reconciled. `warehouse` builds the load backend from
+    * `warehouse_root`.
     */
-  def run(cfg: GraftConfig, spark: SparkSession): Seq[ExtractPipeline.Result[ExtractState]] = {
+  def run(cfg: GraftConfig, spark: SparkSession,
+          warehouse: (String, SparkSession) => WarehouseBackend = new Warehouse(_, _))
+      : Seq[ExtractPipeline.Result[ExtractState]] = {
     val srcDir = cfg.sourceDir.getOrElse(
       throw new IllegalArgumentException("config needs source_dir"))
     val outUri = cfg.targetUri.getOrElse(
       throw new IllegalArgumentException("config needs target_uri (or pass uri on the CLI)"))
-    val store = new StateStore(cfg.stateFile)
+    val target = for (ds <- cfg.targetDataset; root <- cfg.warehouseRoot) yield {
+      val t = ExtractJob.LoadTarget(warehouse(root, spark), Warehouse.DatasetRef.fromString(ds))
+      t.warehouse.createDataset(t.dataset, Warehouse.DatasetMeta(
+        description = cfg.targetDatasetDescription,
+        location = cfg.targetDatasetLocation,
+        labels = cfg.targetDatasetPreLabels,
+        accessEntries = cfg.targetDatasetAccessEntries),
+        drop = cfg.dropDataset)
+      t
+    }
     val jobCfg = ExtractJob.Config(
       rowsPerPartition = cfg.defaultRowsPerPartition,
       targetPartitionBytes = cfg.targetPartitionSizeBytes,
@@ -94,37 +112,17 @@ object Main {
       loadWorkers = cfg.loadWorkers,
       format = cfg.spark.format)
     val specs = cfg.tables.map(t => ExtractJob.TableSpec(t.name, t.key))
-    val results = ExtractJob.run(spark, srcDir, outUri, specs, store, jobCfg)
-
-    // Load stage (reference main.py:170-250 + gcp.py): dataset with
-    // pre-labels up front, table loads, post-labels only on success.
-    (cfg.targetDataset, cfg.warehouseRoot) match {
-      case (Some(ds), Some(root)) =>
-        val wh = new Warehouse(root, spark)
-        val ref = Warehouse.DatasetRef.fromString(ds)
-        wh.createDataset(ref, Warehouse.DatasetMeta(
-          description = cfg.targetDatasetDescription,
-          location = cfg.targetDatasetLocation,
-          labels = cfg.targetDatasetPreLabels,
-          accessEntries = cfg.targetDatasetAccessEntries),
-          drop = cfg.dropDataset)
-        val loaded = results.map {
-          case ExtractPipeline.Result(name, Right(st)) =>
-            val schema = Tables(spark, srcDir, name).schema
-            val res = wh.load(st.extractUri.get, schema, ref, name,
-              format = cfg.spark.format)
-            val fin = st.copy(rowsLoaded = Some(res.outputRows))
-            store.put(fin)
-            ExtractPipeline.Result(name,
-              if (fin.consistent) Right(fin)
-              else Left(new IllegalStateException(
-                s"$name rows_loaded=${res.outputRows} != rows=${st.rows}")): Either[Throwable, ExtractState])
-          case failed => failed
-        }
-        if (loaded.forall(_.result.isRight) && cfg.targetDatasetPostLabels.nonEmpty)
-          wh.applyLabels(ref, cfg.targetDatasetPreLabels ++ cfg.targetDatasetPostLabels)
-        loaded
-      case _ => results
+    val results = ExtractJob.run(spark, srcDir, outUri, specs, new StateStore(cfg.stateFile),
+      jobCfg, target = target).map {
+      case ExtractPipeline.Result(name, Right(st)) if !st.consistent =>
+        ExtractPipeline.Result[ExtractState](name, Left(new IllegalStateException(
+          s"$name rows_loaded=${st.rowsLoaded.getOrElse(-1L)} != rows=${st.rows.getOrElse(-1L)}")))
+      case done => done
     }
+    target.foreach { t =>
+      if (results.forall(_.result.isRight) && cfg.targetDatasetPostLabels.nonEmpty)
+        t.warehouse.applyLabels(t.dataset, cfg.targetDatasetPreLabels ++ cfg.targetDatasetPostLabels)
+    }
+    results
   }
 }

@@ -8,9 +8,18 @@ import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
 /** The complete dumpty ELT flow, end to end: introspect → plan
-  * partitions → extract (compressed JSON + schema.json) → reconcile
-  * counts → persist state for the next run (reference main.py +
-  * pipeline.py orchestration).
+  * partitions → extract (compressed JSON + schema.json) → load →
+  * reconcile counts → persist state for the next run (reference
+  * main.py + pipeline.py orchestration).
+  *
+  * Each table's source is read once, at introspection, and that frame
+  * is carried through all three stages. The load stage IS the
+  * warehouse load: given a [[LoadTarget]], a table loads on the
+  * load-worker pool as soon as its own extract finishes, and
+  * `rowsLoaded` is the row count the warehouse writer observed on the
+  * frame it wrote (a BigQuery load job's `output_rows`, reference
+  * pipeline.py:528-560); with no target it is the count observed on
+  * the extract write. Nothing is read back to be counted.
   *
   * Differences from the reference are Spark-idiomatic, not
   * semantic: stats come from a one-pass aggregate instead of
@@ -34,21 +43,34 @@ object ExtractJob {
       loadWorkers: Int = 4,
       format: String = "json")
 
-  /** One table through the three stages; returns the final state. */
+  /** The dataset every table loads into; it must exist before the run. */
+  final case class LoadTarget(warehouse: WarehouseBackend, dataset: Warehouse.DatasetRef)
+
+  /** A table between stages: its state, the source frame read at
+    * introspection, and the rows the extract write observed.
+    */
+  private final case class InFlight(state: ExtractState, source: DataFrame,
+                                    extractedRows: Long = 0L)
+
+  /** Every table through the three stages; returns the final states. */
   def run(spark: SparkSession, srcDir: String, outDir: String,
           tables: Seq[TableSpec], store: StateStore,
           cfg: Config = Config(),
-          nowEpochS: () => Long = () => Instant.now.getEpochSecond): Seq[ExtractPipeline.Result[ExtractState]] = {
+          nowEpochS: () => Long = () => Instant.now.getEpochSecond,
+          target: Option[LoadTarget] = None): Seq[ExtractPipeline.Result[ExtractState]] = {
 
     val specs = tables.map(t => t.name -> t).toMap
 
-    def introspect(name: String): ExtractState = {
+    def introspect(name: String): InFlight = {
       val spec = specs(name)
       val prior = store.get(name)
-      if (!prior.introspectionExpired(cfg.introspectionExpireS, nowEpochS())) prior
+      val df = Tables(spark, srcDir, name)
+      if (!prior.introspectionExpired(cfg.introspectionExpireS, nowEpochS())) InFlight(prior, df)
       else {
-        val df = Tables(spark, srcDir, name)
-        val row = Introspector.stats(df, name, spec.key).collect()(0)
+        // only the fields read below, so the optimizer prunes the
+        // stats' distinct-key count and its shuffle
+        val row = Introspector.stats(df, name, spec.key)
+          .select("row_cnt", "min_key", "max_key", "dense").collect()(0)
         val rows = row.getAs[Long]("row_cnt")
         val dense = row.getAs[Boolean]("dense")
         val raw = math.round(rows.toDouble / cfg.rowsPerPartition)
@@ -70,29 +92,33 @@ object ExtractJob {
                 .orderBy(col("pred_id"))
                 .collect().map(_.getAs[String]("predicate")).toSeq
             else Nil)
-        state
+        InFlight(state, df)
       }
     }
 
-    def extract(state: ExtractState): ExtractState = {
-      val df = Tables(spark, srcDir, state.name)
-      val uri = Sinks.write(df, outDir, state.name, cfg.format, state.partitions)
+    def extract(t: InFlight): InFlight = {
+      val state = t.state
+      val written = Sinks.write(t.source, outDir, state.name, cfg.format, state.partitions)
       val bytes = Sinks.sizeBytes(outDir, state.name)
       // adaptive sizing for the next run (reference pipeline.py:488)
       val recommended = math.max(1L, math.round(bytes.toDouble / cfg.targetPartitionBytes)).toInt
-      state.copy(
-        extractUri = Some(uri),
-        extractBytes = Some(bytes),
-        partitions = Some(recommended),
-        // partition count changed enough to matter → re-introspect next run
-        introspectEpochS =
-          if (state.partitions.contains(recommended)) state.introspectEpochS else None)
+      t.copy(
+        state = state.copy(
+          extractUri = Some(written.uri),
+          extractBytes = Some(bytes),
+          partitions = Some(recommended),
+          // partition count changed enough to matter → re-introspect next run
+          introspectEpochS =
+            if (state.partitions.contains(recommended)) state.introspectEpochS else None),
+        extractedRows = written.rows)
     }
 
-    def load(state: ExtractState): ExtractState = {
-      val loaded = Sinks.read(spark, state.extractUri.get, cfg.format,
-        Tables(spark, srcDir, state.name).schema).count()
-      val finalState = state.copy(rowsLoaded = Some(loaded))
+    def load(t: InFlight): ExtractState = {
+      val loaded = target.fold(t.extractedRows) { case LoadTarget(wh, ref) =>
+        wh.load(t.state.extractUri.get, t.source.schema, ref, t.state.name,
+          format = cfg.format).outputRows
+      }
+      val finalState = t.state.copy(rowsLoaded = Some(loaded))
       store.put(finalState)
       finalState
     }

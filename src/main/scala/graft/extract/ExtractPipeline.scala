@@ -13,7 +13,9 @@ import scala.util.control.NonFatal
   * flows through as a Future chain — same overlap behavior (a table
   * loads while the next extracts), idiomatic Scala. Stage workloads
   * are driver-side orchestration; the heavy lifting inside
-  * `extract` is a distributed Spark job.
+  * `extract` and `load` is distributed Spark jobs. In ExtractJob the
+  * load stage is the warehouse load itself, so there is no load work
+  * left once the pipeline returns.
   */
 object ExtractPipeline {
 

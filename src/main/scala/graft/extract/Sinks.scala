@@ -1,7 +1,11 @@
 package graft.extract
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
 import java.nio.file.{Files, Paths}
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.functions.GraftFunctions.normalizeStr
 
@@ -20,55 +24,64 @@ object Sinks {
 
   val TimestampFormat = "yyyy-MM-dd HH:mm:ss"
 
-  /** Writes `df` as gzip JSON under `uri`/`table` (normalized name),
-    * plus schema.json; returns the data glob like the reference's
-    * final_uri.
+  /** What an extract write produced: the part-file glob (the
+    * reference's final_uri) and the rows the writer observed.
     */
-  def writeJsonGz(df: DataFrame, uri: String, table: String,
-                  partitions: Option[Int] = None,
-                  normalizeNames: Boolean = true): String = {
-    val name = normalizeStr(table)
-    val out = if (normalizeNames) SchemaNormalizer(df) else df
-    val sized = partitions.map(out.repartition(_)).getOrElse(out)
-    sized.write.mode(SaveMode.Overwrite)
-      .option("timestampFormat", TimestampFormat)
-      .option("compression", "gzip")
-      .json(s"$uri/$name")
-    Files.writeString(Paths.get(s"$uri/$name/schema.json"),
-      BqSchema.toJson(df.schema))
-    s"$uri/$name/part-*.json.gz"
+  final case class Written(uri: String, rows: Long)
+
+  /** Longest wait for a write's observed row count. The count reaches
+    * the driver through the session's query listener shortly after the
+    * write job ends; a missing count is an error, never a silent 0.
+    */
+  private val ObservationWait = Duration(5, "min")
+
+  /** Runs `write` over `df` with a row count attached to the frame it
+    * writes (`Dataset.observe`) and returns that count: the rows the
+    * write job saw, with no second job that reads the output back.
+    * The count rides the write's result stage, where Spark merges each
+    * partition's accumulator once, so a retried task is not counted
+    * twice; callers pass the frame after any repartition or sort.
+    */
+  def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val obs = Observation()
+    write(df.observe(obs, count(lit(1)).as("rows")))
+    Await.result(obs.future, ObservationWait).getAs[Long]("rows")
   }
 
-  /** Format-dispatching sink (reference config `spark.format` +
-    * gcp.py source_format switch): json (gzip), csv (gzip, header),
-    * or parquet — always with the schema.json sidecar, returning the
-    * part glob.
+  /** Writes `df` under `uri`/`table` (normalized name) as gzip JSON
+    * (the reference's contract, pipeline.py:455-468, with its fixed
+    * timestampFormat), gzip CSV with a header, or parquet (reference
+    * config `spark.format` + gcp.py source_format switch), always with
+    * the schema.json sidecar; returns the part glob and the rows
+    * written.
     */
   def write(df: DataFrame, uri: String, table: String, format: String,
             partitions: Option[Int] = None,
-            normalizeNames: Boolean = true): String = format match {
-    case "json" => writeJsonGz(df, uri, table, partitions, normalizeNames)
-    case "parquet" =>
-      val glob = writeParquet(df, uri, table, partitions)
-      Files.writeString(Paths.get(s"$uri/${normalizeStr(table)}/schema.json"),
-        BqSchema.toJson(df.schema))
-      glob
-    case "csv" =>
-      val name = normalizeStr(table)
-      val out = if (normalizeNames) SchemaNormalizer(df) else df
-      val sized = partitions.map(out.repartition(_)).getOrElse(out)
-      sized.write.mode(SaveMode.Overwrite)
-        .option("header", "true")
-        .option("timestampFormat", TimestampFormat)
-        .option("compression", "gzip")
-        .csv(s"$uri/$name")
-      Files.writeString(Paths.get(s"$uri/$name/schema.json"),
-        BqSchema.toJson(df.schema))
-      s"$uri/$name/part-*.csv.gz"
-    case other => throw new IllegalArgumentException(s"unknown format $other")
+            normalizeNames: Boolean = true): Written = {
+    val ext = format match {
+      case "json" => "json.gz"
+      case "csv" => "csv.gz"
+      case "parquet" => "parquet"
+      case other => throw new IllegalArgumentException(s"unknown format $other")
+    }
+    val dir = s"$uri/${normalizeStr(table)}"
+    val out = if (normalizeNames) SchemaNormalizer(df) else df
+    val sized = partitions.map(out.repartition(_)).getOrElse(out)
+    val rows = countedWrite(sized) { d =>
+      val w = d.write.mode(SaveMode.Overwrite)
+      format match {
+        case "json" => w.option("timestampFormat", TimestampFormat)
+            .option("compression", "gzip").json(dir)
+        case "csv" => w.option("header", "true").option("timestampFormat", TimestampFormat)
+            .option("compression", "gzip").csv(dir)
+        case _ => w.parquet(dir)
+      }
+    }
+    Files.writeString(Paths.get(s"$dir/schema.json"), BqSchema.toJson(df.schema))
+    Written(s"$dir/part-*.$ext", rows)
   }
 
-  /** Reader for data this sink wrote (used by load-stage reconcile). */
+  /** Reader for data this sink wrote (the warehouse load's input). */
   def read(spark: org.apache.spark.sql.SparkSession, uri: String, format: String,
            schema: org.apache.spark.sql.types.StructType): DataFrame = format match {
     case "json" => spark.read.schema(schema).json(uri)
@@ -78,15 +91,6 @@ object Sinks {
       .option("timestampFormat", TimestampFormat)
       .csv(uri)
     case other => throw new IllegalArgumentException(s"unknown format $other")
-  }
-
-  /** Parquet sink (the cluster-native format; same naming contract). */
-  def writeParquet(df: DataFrame, uri: String, table: String,
-                   partitions: Option[Int] = None): String = {
-    val name = normalizeStr(table)
-    val sized = partitions.map(df.repartition(_)).getOrElse(df)
-    sized.write.mode(SaveMode.Overwrite).parquet(s"$uri/$name")
-    s"$uri/$name/part-*.parquet"
   }
 
   /** Hive-partitioned parquet sink — the 100 TB LAYOUT primitive:

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 
 /** The reference's load stage (gcp.py:66-183) as a structured,
   * cloud-free warehouse model: datasets with description / location /
@@ -49,6 +49,12 @@ object Warehouse {
       labels: Map[String, String] = Map.empty,
       accessEntries: Seq[String] = Nil)
 
+  /** What one write call put into a table, as a BigQuery load job
+    * reports it (`output_rows`, `output_bytes`): the rows the writer
+    * observed on the frame it wrote — no job reads the table back —
+    * and the bytes of the part files the call added. An append
+    * reports the rows appended, not the table's new total.
+    */
   final case class LoadResult(outputRows: Long, outputBytes: Long)
 
   final case class LoadJob(
@@ -225,14 +231,14 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
 
   /** Load an extracted table into the warehouse (gcp.py:149-183
     * bigquery_load): newline-JSON read with the extract's schema,
-    * dispositions enforced, rows/bytes returned for reconciliation.
+    * dispositions enforced, the rows the load wrote and their bytes
+    * returned for reconciliation.
     */
   def load(uri: String, schema: org.apache.spark.sql.types.StructType,
            ref: DatasetRef, table: String,
            job: LoadJob = LoadJob(),
            format: String = "json"): LoadResult = {
-    if (!datasetExists(ref))
-      throw new IllegalStateException(s"dataset $ref not found")
+    requireDataset(ref)
     val exists = tableExists(ref, table)
     job.create match {
       case CreateNever if !exists =>
@@ -248,16 +254,29 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
           s"table $ref.$table exists and writeDisposition=WRITE_EMPTY")
         SaveMode.ErrorIfExists
     }
-    val df = Sinks.read(spark, uri, format, schema)
-    val out = tablePath(ref, table)
-    df.write.mode(mode).parquet(out.toString)
-    val rows = spark.read.parquet(out.toString).count()
-    val s = Files.list(out)
-    val bytes =
-      try s.filter(p => p.getFileName.toString.startsWith("part-"))
-        .mapToLong(Files.size).sum
-      finally s.close()
-    LoadResult(rows, bytes)
+    countedWrite(Sinks.read(spark, uri, format, schema), ref, table)(_.mode(mode))
+  }
+
+  private def requireDataset(ref: DatasetRef): Unit =
+    if (!datasetExists(ref))
+      throw new IllegalStateException(s"dataset $ref not found")
+
+  /** The one counted table write behind [[load]], [[appendTable]],
+    * [[appendTablePartitioned]] and [[overwritePartitions]]: `df`
+    * written as parquet at the table's path under the writer settings
+    * of `configure`, its rows counted by an observation on the write
+    * job ([[Sinks.countedWrite]]) and its bytes summed over the part
+    * files the write added, listed on the driver.
+    */
+  private def countedWrite(df: DataFrame, ref: DatasetRef, table: String)(
+      configure: DataFrameWriter[Row] => DataFrameWriter[Row]): LoadResult = {
+    requireDataset(ref)
+    val target = tablePath(ref, table)
+    val before = walkPartFiles(target)
+    val rows = Sinks.countedWrite(df)(d => configure(d.write).parquet(target.toString))
+    // the session's file-status cache still lists the pre-write files
+    spark.catalog.refreshByPath(target.toString)
+    LoadResult(rows, (walkPartFiles(target) -- before.keys).values.sum)
   }
 
   def readTable(ref: DatasetRef, table: String): org.apache.spark.sql.DataFrame =
@@ -287,8 +306,7 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
   private def swapWrite(df: org.apache.spark.sql.DataFrame, ref: DatasetRef,
                         table: String, partitionCols: Seq[String],
                         options: Map[String, String] = Map.empty): Unit = {
-    if (!datasetExists(ref))
-      throw new IllegalStateException(s"dataset $ref not found")
+    requireDataset(ref)
     val target = tablePath(ref, table)
     val staging = target.resolveSibling(s"$table.staging")
     val w = df.write.mode(SaveMode.Overwrite).options(options)
@@ -307,16 +325,6 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
     spark.catalog.refreshByPath(target.toString)
   }
 
-  private def partFiles(dir: Path): Map[String, Long] =
-    if (!Files.exists(dir)) Map.empty
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.startsWith("part-"))
-        .map(p => p.getFileName.toString -> Files.size(p)).toMap
-      finally s.close()
-    }
-
   /** Append-only write into a warehouse table — the streaming-index
     * primitive. Unlike [[writeTable]] (a full rewrite, O(table) I/O
     * per call), this lands ONLY the new rows as fresh part files:
@@ -331,20 +339,8 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
     * volume tracks the batch, not the table.
     */
   def appendTable(df: org.apache.spark.sql.DataFrame, ref: DatasetRef,
-                  table: String): LoadResult = {
-    if (!datasetExists(ref))
-      throw new IllegalStateException(s"dataset $ref not found")
-    val target = tablePath(ref, table)
-    val before = partFiles(target)
-    df.write.mode(SaveMode.Append).parquet(target.toString)
-    spark.catalog.refreshByPath(target.toString)
-    val fresh = partFiles(target) -- before.keys
-    val rows =
-      if (fresh.isEmpty) 0L
-      else spark.read.parquet(
-        fresh.keys.map(f => target.resolve(f).toString).toSeq: _*).count()
-    LoadResult(rows, fresh.values.sum)
-  }
+                  table: String): LoadResult =
+    countedWrite(df, ref, table)(_.mode(SaveMode.Append))
 
   /** Part files keyed by path RELATIVE to the table root — the
     * partitioned layouts nest them under `col=value` directories, so
@@ -360,31 +356,15 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
       finally s.close()
     }
 
-  private def freshLoad(target: Path, before: Map[String, Long]): LoadResult = {
-    val fresh = walkPartFiles(target) -- before.keys
-    val rows =
-      if (fresh.isEmpty) 0L
-      else spark.read.parquet(
-        fresh.keys.map(f => target.resolve(f).toString).toSeq: _*).count()
-    LoadResult(rows, fresh.values.sum)
-  }
-
   def appendTablePartitioned(df: org.apache.spark.sql.DataFrame, ref: DatasetRef,
                              table: String, partitionCols: Seq[String]): LoadResult =
     appendTablePartitioned(df, ref, table, partitionCols, Map.empty[String, String])
 
   override def appendTablePartitioned(df: org.apache.spark.sql.DataFrame, ref: DatasetRef,
                                       table: String, partitionCols: Seq[String],
-                                      options: Map[String, String]): LoadResult = {
-    if (!datasetExists(ref))
-      throw new IllegalStateException(s"dataset $ref not found")
-    val target = tablePath(ref, table)
-    val before = walkPartFiles(target)
-    df.write.mode(SaveMode.Append).options(options)
-      .partitionBy(partitionCols: _*).parquet(target.toString)
-    spark.catalog.refreshByPath(target.toString)
-    freshLoad(target, before)
-  }
+                                      options: Map[String, String]): LoadResult =
+    countedWrite(df, ref, table)(
+      _.mode(SaveMode.Append).options(options).partitionBy(partitionCols: _*))
 
   /** Dynamic partition overwrite: Spark replaces only the partition
     * directories present in `df` at commit time; every other
@@ -393,17 +373,9 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
     * standard read-merge-overwrite discipline.
     */
   def overwritePartitions(df: org.apache.spark.sql.DataFrame, ref: DatasetRef,
-                          table: String, partitionCols: Seq[String]): LoadResult = {
-    if (!datasetExists(ref))
-      throw new IllegalStateException(s"dataset $ref not found")
-    val target = tablePath(ref, table)
-    val before = walkPartFiles(target)
-    df.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*).parquet(target.toString)
-    spark.catalog.refreshByPath(target.toString)
-    freshLoad(target, before)
-  }
+                          table: String, partitionCols: Seq[String]): LoadResult =
+    countedWrite(df, ref, table)(_.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic").partitionBy(partitionCols: _*))
 
   override def listPartitions(ref: DatasetRef, table: String): Option[Seq[String]] = {
     val p = tablePath(ref, table)

@@ -40,7 +40,7 @@ class SinksSpec extends AnyFunSuite {
   test("json.gz sink round-trips with schema.json sidecar") {
     val dir = java.nio.file.Files.createTempDirectory("graft-sink").toString
     val src = Tables.nation(spark, sf)
-    val glob = Sinks.writeJsonGz(src, dir, "NATION-Table", partitions = Some(2))
+    val glob = Sinks.write(src, dir, "NATION-Table", "json", partitions = Some(2)).uri
     assert(glob == s"$dir/nation_table/part-*.json.gz")
 
     val files = new java.io.File(s"$dir/nation_table").listFiles()
@@ -64,10 +64,11 @@ class SinksSpec extends AnyFunSuite {
     val src = Tables.nation(spark, sf).filter("n_nationkey < 0")
     assert(src.count() == 0)
     for (fmt <- Seq("json", "csv", "parquet")) {
-      val glob = Sinks.write(src, s"$dir/$fmt", "empty_t", fmt)
+      val written = Sinks.write(src, s"$dir/$fmt", "empty_t", fmt)
+      assert(written.rows == 0, s"$fmt observed rows")
       assert(java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$dir/$fmt/empty_t/schema.json")), s"$fmt sidecar")
-      val back = Sinks.read(spark, glob, fmt, src.schema)
+      val back = Sinks.read(spark, written.uri, fmt, src.schema)
       assert(back.count() == 0, s"$fmt read-back")
       assert(back.schema.fieldNames.sameElements(src.schema.fieldNames))
     }
@@ -82,7 +83,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("sizeBytes sums part files for the adaptive sizing loop") {
     val dir = java.nio.file.Files.createTempDirectory("graft-size").toString
-    Sinks.writeJsonGz(Tables.region(spark, sf), dir, "region")
+    Sinks.write(Tables.region(spark, sf), dir, "region", "json")
     assert(Sinks.sizeBytes(dir, "region") > 0)
     assert(Sinks.sizeBytes(dir, "absent") == 0)
   }

@@ -20,7 +20,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   private lazy val extractUri: String = {
     val out = java.nio.file.Files.createTempDirectory("graft-wh-src").toString
-    Sinks.writeJsonGz(Tables.nation(spark, sf), out, "nation")
+    Sinks.write(Tables.nation(spark, sf), out, "nation", "json").uri
   }
   private def nationSchema = Tables.nation(spark, sf).schema
   private def nationRows = Tables.nation(spark, sf).count()
@@ -67,10 +67,11 @@ class WarehouseSpec extends AnyFunSuite {
     val again = wh.load(extractUri, nationSchema, ref, "nation",
       LoadJob(write = WriteTruncate))
     assert(again.outputRows == nationRows)
-    // WRITE_APPEND doubles
+    // WRITE_APPEND doubles the table; the load reports the rows it
+    // appended, as a BigQuery load job's output_rows does
     val appended = wh.load(extractUri, nationSchema, ref, "nation",
       LoadJob(write = WriteAppend))
-    assert(appended.outputRows == 2 * nationRows)
+    assert(appended.outputRows == nationRows)
     // WRITE_EMPTY refuses when the table exists
     intercept[IllegalStateException](
       wh.load(extractUri, nationSchema, ref, "nation", LoadJob(write = WriteEmpty)))
@@ -87,7 +88,49 @@ class WarehouseSpec extends AnyFunSuite {
     wh.load(extractUri, nationSchema, ref, "nation")
     val ok = wh.load(extractUri, nationSchema, ref, "nation",
       LoadJob(create = CreateNever, write = WriteAppend))
-    assert(ok.outputRows == 2 * nationRows)
+    assert(ok.outputRows == nationRows)
+    assert(wh.readTable(ref, "nation").count() == 2 * nationRows)
+  }
+
+  test("backend seam: both backends report the same rows for truncate, append and empty loads") {
+    import graft.extract.InMemoryWarehouse
+    val emptyUri = {
+      val out = java.nio.file.Files.createTempDirectory("graft-wh-empty").toString
+      Sinks.write(Tables.nation(spark, sf).filter("n_nationkey < 0"), out, "nation", "json").uri
+    }
+    def loads(wh: graft.extract.WarehouseBackend): Seq[Long] = {
+      wh.createDataset(ref, DatasetMeta())
+      Seq(
+        wh.load(extractUri, nationSchema, ref, "nation", LoadJob(write = WriteEmpty)),
+        wh.load(extractUri, nationSchema, ref, "nation", LoadJob(write = WriteTruncate)),
+        wh.load(extractUri, nationSchema, ref, "nation", LoadJob(write = WriteAppend)),
+        wh.load(emptyUri, nationSchema, ref, "nation", LoadJob(write = WriteAppend)),
+        wh.load(emptyUri, nationSchema, ref, "void", LoadJob(write = WriteEmpty)))
+        .map(_.outputRows)
+    }
+    val parquet = loads(new Warehouse(freshRoot(), spark))
+    assert(parquet == Seq(nationRows, nationRows, nationRows, 0L, 0L))
+    assert(parquet == loads(new InMemoryWarehouse(spark)))
+  }
+
+  test("observed counts: zero-row writes report 0 and do not wait for a count") {
+    import org.apache.spark.sql.functions._
+    val wh = new Warehouse(freshRoot(), spark)
+    wh.createDataset(ref, DatasetMeta())
+    val nation = Tables.nation(spark, sf)
+    // folded to an empty relation by the optimizer, cut to no rows by a
+    // limit, and emptied only at run time behind a shuffle
+    val empties = Seq(
+      nation.filter(lit(false)),
+      nation.limit(0),
+      nation.groupBy(col("n_regionkey")).count().filter(col("count") > 1000))
+    empties.zipWithIndex.foreach { case (df, i) =>
+      assert(wh.appendTable(df, ref, s"plain_$i").outputRows == 0, s"appendTable #$i")
+      assert(wh.appendTablePartitioned(df.withColumn("b", lit(1)), ref, s"parted_$i",
+        Seq("b")).outputRows == 0, s"appendTablePartitioned #$i")
+      assert(wh.overwritePartitions(df.withColumn("b", lit(1)), ref, s"parted_$i",
+        Seq("b")).outputRows == 0, s"overwritePartitions #$i")
+    }
   }
 
   test("partition-scoped upsert rewrites ONLY touched partitions, byte-identically elsewhere") {

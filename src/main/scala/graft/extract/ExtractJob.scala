@@ -115,7 +115,8 @@ object ExtractJob {
 
     def load(t: InFlight): ExtractState = {
       val loaded = target.fold(t.extractedRows) { case LoadTarget(wh, ref) =>
-        wh.load(t.state.extractUri.get, t.source.schema, ref, t.state.name,
+        // the extract carries Sinks.write's normalized column names
+        wh.load(t.state.extractUri.get, SchemaNormalizer(t.source).schema, ref, t.state.name,
           format = cfg.format).outputRows
       }
       val finalState = t.state.copy(rowsLoaded = Some(loaded))

@@ -145,6 +145,18 @@ trait WarehouseBackend {
     * without knowing the storage layout.
     */
   def listPartitions(ref: DatasetRef, table: String): Option[Seq[String]] = None
+
+  /** Rows of one hive partition `column=value` of a table; 0 when the
+    * table or the partition is absent. Sizes a partition without a
+    * Spark job: the parquet backend sums its part files' footer counts.
+    */
+  def partitionRows(ref: DatasetRef, table: String, column: String, value: Int): Long
+
+  /** Deletes one hive partition `column=value` of a table, rows and
+    * all; a no-op when the table or the partition is absent. Every
+    * other partition is left untouched.
+    */
+  def dropPartition(ref: DatasetRef, table: String, column: String, value: Int): Unit
 }
 
 class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
@@ -204,15 +216,14 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
     putDataset(ref, merged)
   }
 
-  def deleteDataset(ref: DatasetRef): Unit = {
-    val p = dsPath(ref)
+  def deleteDataset(ref: DatasetRef): Unit = deleteTree(dsPath(ref))
+
+  private def deleteTree(p: Path): Unit =
     if (Files.exists(p)) {
       val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
+      try s.sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
       finally s.close()
     }
-  }
 
   /** gcp.py bigquery_apply_labels: replace the label map. */
   def applyLabels(ref: DatasetRef, labels: Map[String, String]): Unit = {
@@ -315,11 +326,7 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
     val old = target.resolveSibling(s"$table.old")
     if (Files.exists(target)) Files.move(target, old)
     Files.move(staging, target)
-    if (Files.exists(old)) {
-      val s = Files.walk(old)
-      try s.sorted(java.util.Comparator.reverseOrder()).forEach(Files.delete(_))
-      finally s.close()
-    }
+    deleteTree(old)
     // the session's file-status cache still lists the pre-swap part
     // files; a later read of this path would fail FILE_NOT_EXIST
     spark.catalog.refreshByPath(target.toString)
@@ -386,6 +393,24 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
         .filter(_.contains("=")).toSeq)
       finally s.close()
     }
+  }
+
+  def partitionRows(ref: DatasetRef, table: String, column: String, value: Int): Long = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val dir = tablePath(ref, table).resolve(s"$column=$value")
+    val conf = spark.sparkContext.hadoopConfiguration
+    walkPartFiles(dir).keys.toSeq.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(dir.resolve(f).toUri), conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum
+  }
+
+  def dropPartition(ref: DatasetRef, table: String, column: String, value: Int): Unit = {
+    deleteTree(tablePath(ref, table).resolve(s"$column=$value"))
+    // the session's file-status cache still lists the deleted files
+    spark.catalog.refreshByPath(tablePath(ref, table).toString)
   }
 }
 
@@ -519,4 +544,17 @@ class InMemoryWarehouse(spark: SparkSession) extends WarehouseBackend {
     tables.put((key(ref), table), (df.schema, kept ++ fresh))
     LoadResult(fresh.length.toLong, logicalBytes(fresh))
   }
+
+  private def inPartition(schema: StructType, column: String, value: Int): Row => Boolean = {
+    val i = schema.fieldIndex(column)
+    r => r.get(i) == value
+  }
+
+  def partitionRows(ref: DatasetRef, table: String, column: String, value: Int): Long =
+    tables.get((key(ref), table)).fold(0L) { case (schema, rows) =>
+      rows.count(inPartition(schema, column, value)).toLong }
+
+  def dropPartition(ref: DatasetRef, table: String, column: String, value: Int): Unit =
+    tables.get((key(ref), table)).foreach { case (schema, rows) =>
+      tables.put((key(ref), table), (schema, rows.filterNot(inPartition(schema, column, value)))) }
 }

@@ -68,6 +68,9 @@ object DocStreams {
     * PAST saturation. Like Spark bucketing, a table's bucket count
     * is fixed at creation: changing the conf across an existing
     * table's lifetime mis-routes lookups — compact/rebuild instead.
+    * It also sizes level 0 of the leveled dedup tables
+    * ([[runIncrementalDedupToWarehouse]]): L0 folds into the buckets
+    * before it would reach this many rows.
     */
   val IndexBucketsConf = "graft.streaming.indexBuckets"
   val DefaultIndexBuckets = 1024
@@ -106,7 +109,7 @@ object DocStreams {
     * building them last keeps both warehouse backends' column order
     * identical — the seam property).
     */
-  private def bucketOf(c: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
+  private[graft] def bucketOf(c: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(c), lit(n.toLong)).cast("int")
 
   /** Parquet write options for an index append: a bloom filter on
@@ -281,10 +284,13 @@ object DocStreams {
     wh.readTable(ref, auditTable)
       .groupBy(col("verdict")).agg(count(lit(1)).as("n_docs"))
 
-  /** Per-micro-batch ledger of one streaming dedup run: what was
-    * appended to the index and its id sidecar, what the verdict
-    * upsert rewrote, and how many hive partitions each pruned read
-    * actually scanned (None on storage-less backends). The specs'
+  /** Per-micro-batch ledger of one streaming dedup run: what the
+    * batch added to the band index, its id sidecar and the verdict
+    * table, and how many hive partitions each pruned read actually
+    * scanned (None on storage-less backends). Each `outputRows` counts
+    * the batch's own rows only, also when the batch folds the L0 rows
+    * of earlier batches into L1 (see [[runIncrementalDedupToWarehouse]]);
+    * `outputBytes` is the size of the files the call wrote. The specs'
     * scaling gates assert appends AND scans track the batch.
     */
   final case class DedupBatchStats(
@@ -294,6 +300,113 @@ object DocStreams {
       indexScan: Option[ScanStats],
       idScan: Option[ScanStats])
 
+  /** Bucket value of level 0 (L0) of a leveled streaming table: a
+    * sentinel hive partition (`bucket=-1`) in the table's own
+    * directory, so every reader of the table sees its rows. See
+    * [[runIncrementalDedupToWarehouse]] for the two levels.
+    */
+  val L0: Int = -1
+
+  /** One batch's lookup keys for a table: the buckets they touch, the
+    * distinct keys capped at [[lookupPushdownMax]] + 1 (one past the
+    * cap makes [[lookupFilters]] fall back to bucket pruning) and the
+    * row count.
+    */
+  private final case class KeySet(buckets: Seq[Int], keys: Seq[Any], rows: Long)
+
+  /** The [[KeySet]] of `df` from one aggregation and one collect. The
+    * key list is a [[graft.functions.CappedSet]], so no buffer of the
+    * aggregation holds more than the cap's keys, however many the
+    * batch has.
+    */
+  private def keySet[K: scala.reflect.runtime.universe.TypeTag](
+      df: DataFrame, bucketCol: String, keyCol: String): KeySet = {
+    val cap = math.min(lookupPushdownMax(df.sparkSession).toLong + 1, Int.MaxValue).toInt
+    val keys = udaf(graft.functions.CappedSet[K](cap))
+    val r = df.agg(collect_set(col(bucketCol)), keys(col(keyCol)), count(lit(1))).head()
+    KeySet(r.getSeq[Int](0), r.getSeq[Any](1), r.getLong(2))
+  }
+
+  /** [[indexLookup]] of a leveled table: its L0 partition plus the L1
+    * buckets `ks` touches, with the key set pushed down. While the
+    * table does not exist: no rows, in the columns of `shape`.
+    */
+  private def leveledLookup(wh: WarehouseBackend, ref: Warehouse.DatasetRef, table: String,
+                            bucketCol: String, keyCol: String, ks: KeySet,
+                            shape: DataFrame): (DataFrame, Option[ScanStats]) =
+    if (wh.tableExists(ref, table))
+      indexLookup(wh, ref, table, bucketCol, ks.buckets :+ L0, keyCol, ks.keys,
+        HashIndexReadOptions)
+    else (shape.limit(0), None)
+
+  /** Adds one batch's `rows` (bucket column already computed from
+    * `keyCol`, last) to a leveled table. `offered` is an upper bound
+    * of `rows` that a replay of the batch reproduces exactly, however
+    * far the interrupted attempt got: the replay then takes the same
+    * branch below, so an interrupted fold is folded again.
+    *
+    *  - While `L0 rows + offered < indexBuckets`, the rows land in L0
+    *    as ONE file sorted on the key, with a bloom filter on it.
+    *  - Otherwise the batch FOLDS: the L0 rows and the batch's rows are
+    *    appended to their real buckets (one file per touched bucket),
+    *    then the L0 partition is dropped. A fold writes at most
+    *    min(rows, indexBuckets) files, once per indexBuckets rows, and
+    *    costs more than an L0 append: on a long-lived index a fold
+    *    batch takes about twice as long as the others.
+    *
+    * A fold interrupted between its append and its drop leaves the L0
+    * rows in both levels; the next fold appends only the L0 rows that
+    * L1 lacks (`rowKey` is the table's row identity), so a replay of
+    * the batch converges. Returns the rows the batch itself added.
+    */
+  private def leveledAppend[K: scala.reflect.runtime.universe.TypeTag](
+      wh: WarehouseBackend, ref: Warehouse.DatasetRef, table: String,
+      bucketCol: String, keyCol: String, rowKey: Seq[String],
+      rows: DataFrame, offered: Long): Warehouse.LoadResult = {
+    val n = indexBuckets(rows.sparkSession)
+    lazy val l0Rows = wh.partitionRows(ref, table, bucketCol, L0)
+    if (offered == 0) Warehouse.LoadResult(0L, 0L)
+    else if (l0Rows + offered < n)
+      wh.appendTablePartitioned(
+        rows.withColumn(bucketCol, lit(L0)).coalesce(1).sortWithinPartitions(col(keyCol)),
+        ref, table, Seq(bucketCol), bloomWriteOptions(keyCol, offered))
+    else {
+      val (l0, l0Folded) =
+        if (l0Rows == 0) (rows.limit(0), 0L)
+        else {
+          val old = wh.readTable(ref, table, HashIndexReadOptions)
+            .filter(col(bucketCol) === L0).withColumn(bucketCol, bucketOf(col(keyCol), n))
+          val ok = keySet[K](old, bucketCol, keyCol)
+          val (inL1, _) = indexLookup(wh, ref, table, bucketCol, ok.buckets, keyCol, ok.keys,
+            HashIndexReadOptions)
+          val missing = old.join(inL1.select(rowKey.map(col): _*), rowKey, "left_anti")
+            .select(rows.columns.map(col).toIndexedSeq: _*).transform(cut)
+          (missing, missing.count())
+        }
+      val total = l0Rows + offered
+      // an explicit task count: AQE would coalesce the small shuffle
+      // into one task that writes every bucket's file in turn
+      val tasks = rows.sparkSession.sparkContext.defaultParallelism
+      val written = wh.appendTablePartitioned(
+        rows.unionAll(l0).repartition(tasks, col(bucketCol))
+          .sortWithinPartitions(col(bucketCol), col(keyCol)),
+        ref, table, Seq(bucketCol), bloomWriteOptions(keyCol, total / math.min(total, n)))
+      if (l0Rows > 0) wh.dropPartition(ref, table, bucketCol, L0)
+      written.copy(outputRows = written.outputRows - l0Folded)
+    }
+  }
+
+  /** Runs `body` with `name` as the Spark job description of every job
+    * it starts, so listeners and the UI can tell a micro-batch's steps
+    * apart; the previous description is restored afterwards.
+    */
+  private def step[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try body finally sc.setJobDescription(prev)
+  }
+
   /** Streaming incremental near-dup dedup — the production index
     * pattern: the warehouse keeps the MinHash BAND INDEX
     * (doc_id, band_id, band_hash) of every unique doc seen so far,
@@ -301,27 +414,43 @@ object DocStreams {
     * (b) matches fresh docs against the stored index by band
     * equi-join — the index is never recomputed from text —
     * (c) matches fresh docs among themselves, (d) appends only the
-    * UNIQUE docs' bands to the index and upserts the dup verdicts
-    * ((new, matched) keyed). Per batch the work is O(batch × bands)
-    * plus one equi-join against the TOUCHED SLICE of the index.
+    * UNIQUE docs' bands to the index and inserts the dup verdicts
+    * ((new, matched) keyed) it does not hold yet. Per batch the work
+    * is O(batch × bands) plus one equi-join against the TOUCHED SLICE
+    * of the index.
     *
-    * WRITE shape (r4 verdict #1): the index is APPEND-ONLY —
-    * per-batch write I/O is O(batch), never O(index). Insert-only is
-    * safe because a doc's bands never change once indexed and the
-    * replay left-anti guarantees no doc appends twice; deletions go
-    * through [[compactIndex]], the one deliberate rewrite.
+    * LEVELS (LSM-style, two of them): the band index, its doc_id
+    * sidecar (`<indexTable>_ids`) and the verdict table are each
+    * hive-partitioned on a key-hash bucket — `bucket =
+    * hash(band_hash)`, `id_bucket = hash(doc_id)`, `pbucket =
+    * hash(dup_key)`, mod IndexBuckets — which is level 1 (L1), plus
+    * the sentinel partition `=-1`, level 0 (L0). [[leveledAppend]]
+    * holds the fold rule: a batch's rows go to L0 as one file while
+    * L0 stays under IndexBuckets rows; the batch that would fill it
+    * writes L0 and itself into their real buckets and drops L0.
     *
-    * READ shape (r5 verdict #1): the index is hive-partitioned on
-    * `bucket = hash(band_hash) mod IndexBuckets`, and each batch's
-    * band join reads ONLY the partitions the batch's bands hash to —
-    * planning-time pruning, so per-batch read I/O is
-    * O(index / IndexBuckets × touched buckets), bounded by the
-    * batch's band spread, never the whole corpus-sized index. The
-    * replay left-anti is served the same way from a doc_id-bucketed
-    * sidecar (`<indexTable>_ids`) instead of scanning the full band
-    * index for its doc_id column. The dup-verdict table rides
-    * [[upsertPartitioned]] (r5 verdict #2): redelivered dups merge,
-    * but only touched partitions rewrite.
+    * WRITE shape: every table is INSERT-ONLY — per-batch write I/O is
+    * O(batch), never O(index), and a small batch writes one file per
+    * table. Insert-only is safe because a doc's bands never change
+    * once indexed, the replay left-anti keeps a doc from appending
+    * twice, and a verdict row is a pure function of its key, so a
+    * verdict inserts only if its `dup_key` is absent (the replay-safe
+    * equivalent of a keyed upsert). A fresh doc that matches its OWN
+    * index rows (a batch replayed after its index write but before
+    * its sidecar write) is neither re-appended nor flagged. Deletions
+    * go through [[compactIndex]], the one deliberate rewrite.
+    *
+    * READ shape: each lookup reads L0 plus ONLY the L1 buckets the
+    * batch's keys hash to — planning-time pruning, so per-batch read
+    * I/O is bounded by IndexBuckets L0 rows plus
+    * O(index / IndexBuckets × touched buckets) — with the key set
+    * pushed to parquet's row-group filters ([[indexLookup]]). The
+    * replay left-anti is served the same way by the sidecar instead
+    * of the band index's doc_id column.
+    *
+    * Each step's jobs carry the step's name as their job description:
+    * ids, fresh, bands, lookup, dupes, append index, append ids,
+    * verdicts.
     *
     * Returns per-batch append AND pruned-scan stats so the spec's
     * scaling gates can assert both write and read volume track the
@@ -338,90 +467,81 @@ object DocStreams {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         val nBuckets = indexBuckets(spark)
-        val pushMax = lookupPushdownMax(spark)
+        val docs = batch.toDF()
         // replay skip: which of the batch's doc_ids are already
-        // indexed? Served by the id sidecar pruned to the batch's
-        // id buckets — never by scanning the band index
-        val batchIds = batch.toDF().select(col("doc_id")).distinct()
-          .withColumn("id_bucket", bucketOf(col("doc_id"), nBuckets))
-          .transform(cut)
-        val touchedIdB = batchIds.select("id_bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val batchDocIds = batchIds.select("doc_id").limit(pushMax + 1)
-          .collect().map(_.getLong(0)).toSeq
-        val (seen, idScan) =
-          if (wh.tableExists(ref, idsTable)) {
-            val (pruned, scan) = indexLookup(wh, ref, idsTable,
-              "id_bucket", touchedIdB, "doc_id", batchDocIds, HashIndexReadOptions)
-            (pruned.select(col("doc_id")), scan)
-          } else
-            (spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              StructType(Seq(StructField("doc_id", LongType)))), None)
-        val fresh = batch.toDF().select(col("doc_id"), col("text"))
-          .join(seen, Seq("doc_id"), "left_anti")
-          .transform(cut)
-        val bands = Dedup.minhashBands(Dedup.minhashSignatures(fresh))
+        // indexed? Served by the id sidecar pruned to the batch's id
+        // buckets — never by scanning the band index
+        val batchIds = docs.select(col("doc_id"),
+          bucketOf(col("doc_id"), nBuckets).as("id_bucket"))
+        val ik = step(spark, "ids")(keySet[Long](batchIds, "id_bucket", "doc_id"))
+        val (seen, idScan) = step(spark, "fresh")(
+          leveledLookup(wh, ref, idsTable, "id_bucket", "doc_id", ik, batchIds))
+        val fresh = docs.select(col("doc_id"), col("text"))
+          .join(seen.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        val bands = step(spark, "bands")(Dedup.minhashBands(Dedup.minhashSignatures(fresh))
           .withColumn("bucket", bucketOf(col("band_hash"), nBuckets))
-          .transform(cut)
-        // band match vs the persisted index: partition-prune to the
-        // buckets this batch's bands hash to, and push the band-hash
-        // set itself down to parquet's row-group filters — the level
-        // that still bounds the read when the batch's band spread
-        // saturates the bucket count
-        val touchedB = bands.select("bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val batchHashes = bands.select("band_hash").distinct().limit(pushMax + 1)
-          .collect().map(_.getString(0)).toSeq
-        val (idx, idxScan) =
-          if (wh.tableExists(ref, indexTable)) {
-            indexLookup(wh, ref, indexTable,
-              "bucket", touchedB, "band_hash", batchHashes, HashIndexReadOptions)
-          } else
-            (spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-              StructType(Seq(StructField("doc_id", LongType),
-                StructField("band_id", IntegerType), StructField("band_hash", StringType),
-                StructField("bucket", IntegerType)))), None)
-        val vsOld = bands.toDF("new_doc", "band_n", "hash_n", "bucket_n")
-          .join(idx.toDF("old_doc", "band_o", "hash_o", "bucket_o"),
-            col("band_n") === col("band_o") && col("hash_n") === col("hash_o"))
-          .select(col("new_doc"), col("old_doc").as("matched_doc"))
-        val a = bands.toDF("doc_a", "band_a", "hash_a", "bucket_a")
-        val b = bands.toDF("doc_b", "band_b", "hash_b", "bucket_b")
-        val vsNew = a.join(b,
-            col("band_a") === col("band_b") && col("hash_a") === col("hash_b")
-              && col("doc_a") < col("doc_b"))
-          .select(col("doc_b").as("new_doc"), col("doc_a").as("matched_doc"))
-        val dupes = vsOld.unionAll(vsNew).distinct().transform(cut)
-        val newDups = dupes.select(col("new_doc").as("doc_id")).distinct()
-        // append shape: one file per touched bucket (repartition on
-        // the bucket), rows sorted by the lookup key inside it, and a
-        // bloom filter on the key — the layout later lookups skip on
-        val uniqueBands = bands
-          .join(newDups, Seq("doc_id"), "left_anti")
-          .dropDuplicates("doc_id", "band_id")
-          .select(col("doc_id"), col("band_id"), col("band_hash"), col("bucket"))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("bucket"), col("band_hash"))
-        // bloom NDV per append FILE = batch bands / touched buckets
-        // (the append lands one file per touched bucket)
-        val bandNdv = bands.count() / math.max(1, touchedB.size)
-        val idxAppend =
-          wh.appendTablePartitioned(uniqueBands, ref, indexTable, Seq("bucket"),
-            bloomWriteOptions("band_hash", bandNdv))
+          .transform(cut))
+        // band match vs the persisted index: L0 plus the L1 buckets
+        // this batch's bands hash to, with the band-hash set pushed
+        // down to parquet's row-group filters — the level that still
+        // bounds the read when the band spread saturates the buckets
+        val (bk, (idx, idxScan)) = step(spark, "lookup") {
+          val bk = keySet[String](bands, "bucket", "band_hash")
+          (bk, leveledLookup(wh, ref, indexTable, "bucket", "band_hash", bk, bands))
+        }
+        // every (new, matched) pair, a fresh doc's match with its own
+        // index rows included (see the WRITE shape above)
+        val pairs = step(spark, "dupes") {
+          val vsOld = bands.toDF("new_doc", "band_n", "hash_n", "bucket_n")
+            .join(idx.toDF("old_doc", "band_o", "hash_o", "bucket_o"),
+              col("band_n") === col("band_o") && col("hash_n") === col("hash_o"))
+            .select(col("new_doc"), col("old_doc").as("matched_doc"))
+          val a = bands.toDF("doc_a", "band_a", "hash_a", "bucket_a")
+          val b = bands.toDF("doc_b", "band_b", "hash_b", "bucket_b")
+          val vsNew = a.join(b,
+              col("band_a") === col("band_b") && col("hash_a") === col("hash_b")
+                && col("doc_a") < col("doc_b"))
+            .select(col("doc_b").as("new_doc"), col("doc_a").as("matched_doc"))
+          vsOld.unionAll(vsNew).distinct().transform(cut)
+        }
+        val dupes = pairs.filter(col("new_doc") =!= col("matched_doc"))
+        val newDups = dupes.select(col("new_doc").as("doc_id"))
+        // minhash keys bands by doc, so (doc_id, band_id) is unique
+        // here; the matched doc ids number at most the batch's docs,
+        // so both anti-joins broadcast them instead of shuffling bands.
+        // Both appends offer a count of the batch's own docs, which a
+        // replay reproduces (fresh docs shrink once the sidecar holds
+        // them)
+        val idxAppend = step(spark, "append index")(leveledAppend[String](wh, ref, indexTable,
+          "bucket", "band_hash", Seq("doc_id", "band_id"),
+          bands.join(broadcast(pairs.select(col("new_doc").as("doc_id"))), Seq("doc_id"), "left_anti"),
+          ik.rows * Dedup.Bands))
         // the sidecar mirrors the index's doc set exactly: fresh
-        // uniques only (dup docs stay unindexed so replays re-flag)
-        val uniqueIds = batchIds
-          .join(fresh.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .join(newDups, Seq("doc_id"), "left_anti")
-          .repartition(col("id_bucket"))
-          .sortWithinPartitions(col("id_bucket"), col("doc_id"))
-        val idsAppend =
-          wh.appendTablePartitioned(uniqueIds, ref, idsTable, Seq("id_bucket"),
-            bloomWriteOptions("doc_id",
-              batchIds.count() / math.max(1, touchedIdB.size)))
-        val verdicts = dupes.withColumn("dup_key",
-          concat(col("new_doc").cast("string"), lit("#"), col("matched_doc").cast("string")))
-        val verdictWrite = upsertPartitioned(wh, ref, dupTable, verdicts, "dup_key")
+        // uniques only (dup docs stay unindexed so replays re-flag);
+        // band 0 is one row per fresh doc
+        val idsAppend = step(spark, "append ids")(leveledAppend[Long](wh, ref, idsTable,
+          "id_bucket", "doc_id", Seq("doc_id"),
+          bands.filter(col("band_id") === 0)
+            .select(col("doc_id"), bucketOf(col("doc_id"), nBuckets).as("id_bucket"))
+            .join(broadcast(newDups), Seq("doc_id"), "left_anti"),
+          ik.rows))
+        val verdictWrite = step(spark, "verdicts") {
+          val key = concat(col("new_doc").cast("string"), lit("#"), col("matched_doc").cast("string"))
+          val verdicts = dupes.withColumn("dup_key", key)
+            .withColumn("pbucket", bucketOf(col("dup_key"), nBuckets))
+          // the pairs, and so their count, are the same on a replay:
+          // a pair whose matched doc the first attempt indexed is
+          // found in the index instead of among the fresh docs
+          val vk = keySet[String](verdicts, "pbucket", "dup_key")
+          if (vk.rows == 0) Warehouse.LoadResult(0L, 0L)
+          else {
+            val (held, _) = leveledLookup(wh, ref, dupTable, "pbucket", "dup_key", vk, verdicts)
+            leveledAppend[String](wh, ref, dupTable, "pbucket", "dup_key", Seq("dup_key"),
+              verdicts.join(held.select(col("dup_key")), Seq("dup_key"), "left_anti")
+                .select(verdicts.columns.map(col).toIndexedSeq: _*),
+              vk.rows)
+          }
+        }
         stats += DedupBatchStats(idxAppend, idsAppend, verdictWrite, idxScan, idScan)
         ()
       }
@@ -850,11 +970,14 @@ object DocStreams {
     * rewrite of index and id sidecar; the ONE deliberate full
     * rewrite (deletions can empty a partition, which a dynamic
     * overwrite would leave stale), preserving the bucket layout so
-    * per-batch pruning keeps working. The index shrinks, it is
-    * never rebuilt from text.
+    * per-batch pruning keeps working. `bucket`/`id_bucket` are
+    * recomputed from the key, so the rewrite also folds L0 (see
+    * [[runIncrementalDedupToWarehouse]]): afterwards every row is in
+    * its L1 bucket. The index shrinks, it is never rebuilt from text.
     */
   def compactIndex(wh: WarehouseBackend, ref: Warehouse.DatasetRef, indexTable: String,
                    deletedDocs: DataFrame): Unit = {
+    val n = indexBuckets(deletedDocs.sparkSession)
     // LSM-style re-cluster on rewrite: range-partition on
     // (bucket, key) then sort, so each post-compaction file covers a
     // NARROW contiguous key subrange of its bucket — per-append
@@ -862,6 +985,7 @@ object DocStreams {
     // (uniform hashes), which is why fresh appends lean on bloom
     // filters; compaction is where min/max stats become sharp again
     val kept = wh.readTable(ref, indexTable)
+      .withColumn("bucket", bucketOf(col("band_hash"), n))
       .join(deletedDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .transform(cut)
       .repartitionByRange(col("bucket"), col("band_hash"))
@@ -872,6 +996,7 @@ object DocStreams {
     val idsTable = s"${indexTable}_ids"
     if (wh.tableExists(ref, idsTable)) {
       val keptIds = wh.readTable(ref, idsTable)
+        .withColumn("id_bucket", bucketOf(col("doc_id"), n))
         .join(deletedDocs.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .transform(cut)
         .repartitionByRange(col("id_bucket"), col("doc_id"))

@@ -53,6 +53,28 @@ class ExtractJobSpec extends AnyFunSuite {
     assert(store.get("nation").introspectEpochS.exists(_ >= 10000L))
   }
 
+  test("load uses the extract's normalized column names: upper-case columns keep their values") {
+    import org.apache.spark.sql.functions._
+    val src = java.nio.file.Files.createTempDirectory("graft-elt-upper")
+    val nation = Tables.nation(spark, sf)
+    nation.select(col("n_nationkey").as("N_NATIONKEY"), col("n_name").as("N_NAME"))
+      .write.parquet(src.resolve("upper.parquet").toString)
+    val out = java.nio.file.Files.createTempDirectory("graft-elt-upper-out").toString
+    val wh = new Warehouse(java.nio.file.Files.createTempDirectory("graft-elt-upper-wh").toString, spark)
+    val ref = Warehouse.DatasetRef.fromString("proj.upper")
+    wh.createDataset(ref, Warehouse.DatasetMeta())
+    val results = ExtractJob.run(spark, src.toString, out,
+      Seq(ExtractJob.TableSpec("upper", "N_NATIONKEY")), new StateStore(s"$out/state.json"),
+      ExtractJob.Config(), () => 1000L, Some(ExtractJob.LoadTarget(wh, ref)))
+    assert(results.forall(_.result.isRight), results.toString)
+    val loaded = wh.readTable(ref, "upper")
+    assert(loaded.filter(col("n_name").isNull || col("n_nationkey").isNull).count() == 0,
+      "loaded columns are null")
+    assert(loaded.columns.toSeq == Seq("n_nationkey", "n_name"))
+    assert(loaded.collect().map(r => (r.get(0), r.getString(1))).toSet ==
+      nation.select("n_nationkey", "n_name").collect().map(r => (r.get(0), r.getString(1))).toSet)
+  }
+
   test("ELT round-trips in csv and parquet formats too") {
     import org.apache.spark.sql.functions._
     for (fmt <- Seq("csv", "parquet")) {

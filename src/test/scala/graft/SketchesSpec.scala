@@ -414,6 +414,24 @@ class SketchesSpec extends AnyFunSuite {
       "synopsis IS the bottom-k distinct set")
   }
 
+  test("capped set: every distinct value below the cap, exactly cap values past it") {
+    // 600 distinct keys, each twice, over 8 partitions: partial
+    // buffers fill up before they merge
+    val keys = (0 until 1200).map(i => s"k${i % 600}")
+    val df = keys.toDF("k").repartition(8)
+    def run(d: org.apache.spark.sql.DataFrame, cap: Int): Seq[String] = {
+      val capped = udaf(graft.functions.CappedSet[String](cap))
+      d.agg(capped(col("k"))).head().getSeq[String](0)
+    }
+    assert(run(df, 601).sorted == keys.distinct.sorted)
+    Seq(1, 7, 599, 600).foreach { cap =>
+      val got = run(df, cap)
+      assert(got.size == cap && got.distinct.size == cap && got.toSet.subsetOf(keys.toSet),
+        s"cap $cap: ${got.size} values")
+    }
+    assert(run(df.limit(0), 5).isEmpty)
+  }
+
   test("kmv set ops: trimmed estimates near exact, untrimmed pairs exact") {
     import spark.implicits._
     import graft.functions.GraftFunctions.{shingleHashes, tokens}

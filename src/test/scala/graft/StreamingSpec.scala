@@ -1181,6 +1181,160 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  /** Two staged micro-batches for the leveled-index specs, in arrival
+    * order: 30 fresh docs; then 100 fresh docs with exact copies of 20
+    * docs of the first batch and of 20 of its own. At 128 index
+    * buckets the first batch's bands and ids stay in L0, and the
+    * second batch folds both tables with a non-empty L0.
+    */
+  private lazy val leveledStaged: java.nio.file.Path = {
+    import org.apache.spark.sql.functions._
+    import java.nio.file.Files
+    import graft.operators.Dedup
+    val docs = graft.sources.Tables.documents(spark, sf)
+    def range(lo: Long, hi: Long) = docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+    def copies(lo: Long, hi: Long) = range(lo, hi).withColumn("doc_id", col("doc_id") + Dedup.Shift)
+    val staged = Files.createTempDirectory("graft-leveled")
+    val t0 = System.currentTimeMillis()
+    Seq(range(0, 30), range(30, 130).unionByName(copies(0, 20)).unionByName(copies(30, 50)))
+      .zipWithIndex.foreach { case (b, i) =>
+        val tmp = Files.createTempDirectory(s"graft-leveled-w$i")
+        b.coalesce(1).write.parquet(tmp.resolve("d").toString)
+        val part = Files.list(tmp.resolve("d")).toArray.map(_.toString)
+          .filter(_.endsWith(".parquet")).head
+        val dst = staged.resolve(s"b$i.parquet")
+        Files.copy(java.nio.file.Paths.get(part), dst)
+        Files.setLastModifiedTime(dst, java.nio.file.attribute.FileTime.fromMillis(t0 + 2000L * i))
+      }
+    staged
+  }
+
+  private val leveledRef = graft.extract.Warehouse.DatasetRef.fromString("proj.leveled")
+
+  /** Runs the incremental dedup over [[leveledStaged]] at `buckets`
+    * index buckets into `wh`. */
+  private def leveledRun(wh: graft.extract.WarehouseBackend, buckets: Int)
+      : Seq[graft.streaming.DocStreams.DedupBatchStats] = {
+    import graft.streaming.DocStreams
+    val prev = spark.conf.get(DocStreams.IndexBucketsConf)
+    spark.conf.set(DocStreams.IndexBucketsConf, buckets.toString)
+    try DocStreams.runIncrementalDedupToWarehouse(spark, leveledStaged.toString, wh,
+      leveledRef, "band_index", "dupes")
+    finally spark.conf.set(DocStreams.IndexBucketsConf, prev)
+  }
+
+  /** A parquet warehouse with the leveled dataset that calls
+    * `onDrop(table, rows of the partition)` before each partition drop.
+    */
+  private def leveledWarehouse(onDrop: (String, Long) => Unit = (_, _) => ())
+      : graft.extract.Warehouse = {
+    import graft.extract.Warehouse
+    val wh = new Warehouse(java.nio.file.Files.createTempDirectory("graft-wh-lvl").toString, spark) {
+      override def dropPartition(ref: Warehouse.DatasetRef, table: String, column: String,
+                                 value: Int): Unit = {
+        onDrop(table, partitionRows(ref, table, column, value))
+        super.dropPartition(ref, table, column, value)
+      }
+    }
+    wh.createDataset(leveledRef, Warehouse.DatasetMeta())
+    wh
+  }
+
+  /** (flagged pairs, indexed docs, id-sidecar docs) of a leveled run. */
+  private def leveledState(wh: graft.extract.WarehouseBackend)
+      : (Set[(Long, Long)], Set[Long], Set[Long]) = (
+    wh.readTable(leveledRef, "dupes").select("new_doc", "matched_doc").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet,
+    wh.readTable(leveledRef, "band_index").select("doc_id").collect().map(_.getLong(0)).toSet,
+    wh.readTable(leveledRef, "band_index_ids").select("doc_id").collect().map(_.getLong(0)).toSet)
+
+  /** One clean leveled run: its stats, warehouse and final state, and
+    * the (table, L0 rows) of every fold. */
+  private final case class LeveledRun(
+      stats: Seq[graft.streaming.DocStreams.DedupBatchStats], wh: graft.extract.Warehouse,
+      state: (Set[(Long, Long)], Set[Long], Set[Long]), folds: Seq[(String, Long)])
+
+  private lazy val leveled128: LeveledRun = {
+    val folds = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val wh = leveledWarehouse((t, rows) => folds += (t -> rows))
+    val stats = leveledRun(wh, 128)
+    LeveledRun(stats, wh, leveledState(wh), folds.toSeq)
+  }
+
+  test("leveled dedup index: all-L0, all-folded and threshold-crossing runs agree") {
+    import graft.operators.Dedup
+    val runs = Seq(2, 128, 1 << 20).map { n =>
+      val (stats, wh) =
+        if (n == 128) (leveled128.stats, leveled128.wh)
+        else { val w = leveledWarehouse(); (leveledRun(w, n), w) }
+      assert(stats.length == 2, s"$n buckets: ${stats.length} micro-batches")
+      // outputRows counts each batch's own rows, also across folds
+      assert(stats.map(_.indexAppend.outputRows).sum
+        == wh.readTable(leveledRef, "band_index").count(), s"$n buckets: index ledger")
+      assert(stats.map(_.idsAppend.outputRows).sum
+        == wh.readTable(leveledRef, "band_index_ids").count(), s"$n buckets: sidecar ledger")
+      val l0 = wh.partitionRows(leveledRef, "band_index", "bucket", -1)
+      if (n == 2) assert(l0 == 0, "every batch folds at 2 buckets")
+      if (n == 1 << 20)
+        assert(l0 == wh.readTable(leveledRef, "band_index").count(), "everything stays in L0")
+      n -> leveledState(wh)
+    }
+    // the 128-bucket run folded the index and the sidecar while their
+    // L0 held the first batch's rows
+    Seq("band_index", "band_index_ids").foreach { t =>
+      assert(leveled128.folds.exists { case (ft, rows) => ft == t && rows > 0 },
+        s"$t never folded a non-empty L0: ${leveled128.folds}")
+    }
+    val (flagged, indexed, ids) = runs.head._2
+    assert(flagged.map(_._1).contains(Dedup.Shift) && flagged.map(_._1).contains(Dedup.Shift + 30))
+    assert(indexed.size > 100 && ids == indexed)
+    runs.tail.foreach { case (n, st) =>
+      assert(st == runs.head._2, s"$n buckets diverge from 2 buckets")
+    }
+  }
+
+  test("leveled dedup index: an interrupted fold converges on replay, compaction folds L0") {
+    import org.apache.spark.sql.functions._
+    import graft.streaming.DocStreams
+    // the band index folds first, the sidecar after it: a replay after
+    // the sidecar's failure finds the batch's uniques already indexed
+    Seq("band_index", "band_index_ids").foreach { failing =>
+      var armed = true
+      val wh = leveledWarehouse { (table, rows) =>
+        // the first drop of this table's non-empty L0 fails after its L1 append
+        if (armed && table == failing && rows > 0) {
+          armed = false; throw new RuntimeException(s"injected: $table")
+        }
+      }
+      intercept[Exception](leveledRun(wh, 128))
+      assert(!armed, s"$failing: the injected failure did not fire")
+      leveledRun(wh, 128)
+      assert(leveledState(wh) == leveled128.state, s"$failing: replayed tables differ from a clean run")
+      def dupKeys(table: String, key: String*): Long =
+        wh.readTable(leveledRef, table).count() -
+          wh.readTable(leveledRef, table).select(key.map(col): _*).distinct().count()
+      assert(dupKeys("band_index", "doc_id", "band_id") == 0, s"$failing: duplicate index rows")
+      assert(dupKeys("band_index_ids", "doc_id") == 0, s"$failing: duplicate sidecar rows")
+      assert(dupKeys("dupes", "dup_key") == 0, s"$failing: duplicate verdicts")
+    }
+    // compaction of a run that left every row in L0
+    val wh = leveledWarehouse()
+    leveledRun(wh, 1 << 20)
+    import spark.implicits._
+    val prev = spark.conf.get(DocStreams.IndexBucketsConf)
+    spark.conf.set(DocStreams.IndexBucketsConf, "128")
+    try DocStreams.compactIndex(wh, leveledRef, "band_index", Seq.empty[Long].toDF("doc_id"))
+    finally spark.conf.set(DocStreams.IndexBucketsConf, prev)
+    assert(leveledState(wh) == leveled128.state, "compaction changed the tables' rows")
+    Seq("band_index" -> ("bucket", "band_hash"), "band_index_ids" -> ("id_bucket", "doc_id"))
+      .foreach { case (t, (b, k)) =>
+        assert(!wh.listPartitions(leveledRef, t).get.exists(_.endsWith("=-1")), s"$t kept L0")
+        assert(wh.readTable(leveledRef, t)
+          .filter(col(b) =!= DocStreams.bucketOf(col(k), 128)).count() == 0,
+          s"$t has rows outside their bucket")
+      }
+  }
+
   test("streaming windowed agg matches the batch plan") {
     val streamed = EventStreams.runToMemory(spark, sf)
       .collect().map(_.toString).sorted

@@ -230,6 +230,30 @@ class WarehouseSpec extends AnyFunSuite {
       "final index/verdict state diverges across backends")
   }
 
+  test("backend seam: both backends count and drop one partition the same way") {
+    import org.apache.spark.sql.functions._
+    import graft.extract.{InMemoryWarehouse, WarehouseBackend}
+    // two appends into partition b=-1 (several part files), one into b=0
+    def run(wh: WarehouseBackend): Seq[Any] = {
+      wh.createDataset(ref, DatasetMeta())
+      def rows(lo: Long, hi: Long, b: Int) =
+        spark.range(lo, hi).select(col("id").as("k"), lit(b).as("b"))
+      val before = wh.partitionRows(ref, "t", "b", -1)
+      wh.appendTablePartitioned(rows(0, 3, -1), ref, "t", Seq("b"))
+      wh.appendTablePartitioned(rows(3, 5, -1), ref, "t", Seq("b"))
+      wh.appendTablePartitioned(rows(5, 7, 0), ref, "t", Seq("b"))
+      val counted = Seq(-1, 0, 7).map(wh.partitionRows(ref, "t", "b", _))
+      wh.dropPartition(ref, "t", "b", -1)
+      wh.dropPartition(ref, "t", "b", 7)
+      wh.dropPartition(ref, "absent", "b", -1)
+      Seq(before, counted, wh.partitionRows(ref, "t", "b", -1),
+        wh.readTable(ref, "t").collect().map(r => (r.getLong(0), r.getInt(1))).toSet)
+    }
+    val parquet = run(new Warehouse(freshRoot(), spark))
+    assert(parquet == Seq(0L, Seq(5L, 2L, 0L), 0L, Set(5L -> 0, 6L -> 0)))
+    assert(parquet == run(new InMemoryWarehouse(spark)))
+  }
+
   test("load into an unknown dataset fails") {
     val wh = new Warehouse(freshRoot(), spark)
     intercept[IllegalStateException](

@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Benchmark main: every SparkEntry query timed at
   * SPARK_GRAFT_SF_DIR.
@@ -24,9 +25,10 @@ import org.apache.spark.sql.SparkSession
   * on its own PRECEDING stdout line and the final line carries the
   * stable-order compact array — the r15-verdict-prescribed fallback.
   *
-  * Memo honesty (r15 verdict #3): every per-(session, dir) family
-  * memo is cleared via [[MemoRegistry.reset]] at each sweep boundary,
-  * so each sweep pays each shared stage exactly once and the
+  * Memo honesty (r15 verdict #3): the one shared-stage map of
+  * [[MemoRegistry]] (every family memo, keyed on (name, session,
+  * dir)) is cleared via [[MemoRegistry.reset]] at each sweep
+  * boundary, so each sweep pays each shared stage exactly once and the
   * pointwise-min samples measure real computation, not checkpoint
   * reads. Queries still share stages WITHIN a sweep — the legitimate
   * production shape.
@@ -37,13 +39,7 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val sweeps = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     // Warm codegen/JIT per query plan at the smallest SF so timed

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 
 /** Candidate-mass probe for the blocked-join families (r12 verdict
   * #7: exponent notes need measured candidate masses, not just time
@@ -27,13 +29,7 @@ object MassProbe {
     // skipped the others on a bare <sfDir> invocation)
     def wants(fam: String): Boolean = only.forall(_.contains(fam))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def p(name: String, v: Long): Unit = println(f"[mass] $name%-28s $v%12d")
 

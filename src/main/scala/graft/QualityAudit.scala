@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
+import graft.MemoRegistry.cut
+import graft.core.GraftSession
 import graft.operators.Similarity
 
 /** ANN quality audit: the recall/candidate numbers for the LSH
@@ -16,13 +17,7 @@ object QualityAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
     val lshPoints = Similarity.lshSweep(emb, Similarity.DefaultLshLadder)
@@ -39,7 +34,7 @@ object QualityAudit {
     // pool x queries for the refine.
     import org.apache.spark.sql.functions.col
     val exact = Similarity.bruteTopK(emb)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")).transform(cut)
     val exactN = exact.count().toDouble
     def recallOf(df: org.apache.spark.sql.DataFrame): Double =
       df.select(col("query_id"), col("neighbor_id"))
@@ -161,9 +156,9 @@ object QualityAudit {
     // nndEdges is consumed by three actions (agreement join, edge
     // count, beam serve) — pin it like exactEdges so the descent
     // build's final top-k window runs once (r13 ADVICE)
-    val nndEdges = Similarity.knnServingEdgesDescent(emb).localCheckpoint()
+    val nndEdges = cut(Similarity.knnServingEdgesDescent(emb))
     val nndEdgeCount = nndEdges.count()
-    val exactEdges = Similarity.knnServingEdges(emb).localCheckpoint()
+    val exactEdges = cut(Similarity.knnServingEdges(emb))
     val exactEdgeN = exactEdges.count().toDouble
     val edgeAgree =
       nndEdges.join(exactEdges, Seq("vec_a", "vec_b")).count() / exactEdgeN

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.GraftSession
 
 /** One-off sf1 scale rehearsal (r7 verdict #7): time the top-cost
   * operator families once at sf0.1 and once at a 10x generated sf1
@@ -252,13 +253,7 @@ object ScaleRehearsal {
     // merged via tools/scale_merge.py — the Verify filter discipline).
     val only: Option[Set[String]] = rest.headOption.map(_.split(",").toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def time(fn: (SparkSession, String) => DataFrame, dir: String): Double = {
       val t0 = System.nanoTime()

@@ -1,11 +1,14 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Optimization-round measurement aid: time a NAMED SUBSET of
   * SparkEntry.queries with the Bench protocol (same session conf,
   * same warm sweep + pointwise-min-of-3), without paying a full
   * 236-query sweep per iteration. The committed evidence epochs stay
-  * graft.Bench runs; this is the inner-loop stopwatch only.
+  * graft.Bench runs; this is the inner-loop stopwatch only. Like
+  * Bench, it clears the one shared-stage map ([[MemoRegistry.reset]])
+  * before each sweep.
   *
   * Usage: runMain graft.TimeQueries <sfDir> <names-csv> [sweeps]
   */
@@ -15,13 +18,7 @@ object TimeQueries {
     val names = args(1).split(",").toSeq
     val sweeps = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val qs = names.map(n => n -> SparkEntry.queries(n))
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {

@@ -3,6 +3,7 @@ package graft.extract
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoRegistry.{cut, shared}
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -38,16 +39,9 @@ object ExtractQueries {
     * once and renders predicates from the table). O(partitions) rows,
     * lineage-cut; both oracle outputs are byte-identical.
     */
-  private val julMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), org.apache.spark.sql.DataFrame])
-
   def qJulienne(s: SparkSession, dir: String): DataFrame =
-    julMemo.getOrElseUpdate((s, dir), {
-      val b = PartitionPlanner.julienneBoundaries(
-        Tables.orders(s, dir), "o_orderkey", RowsPerPartition)
-      if (s.sparkContext.getCheckpointDir.isDefined) b.checkpoint()
-      else b.localCheckpoint()
-    })
+    shared("qJulienne", s, dir)(cut(PartitionPlanner.julienneBoundaries(
+      Tables.orders(s, dir), "o_orderkey", RowsPerPartition)))
 
   def qPredicates(s: SparkSession, dir: String): DataFrame =
     PartitionPlanner.juliennePredicates(qJulienne(s, dir), "o_orderkey")

@@ -376,7 +376,7 @@ class Warehouse(root: String, spark: SparkSession) extends WarehouseBackend {
   /** Dynamic partition overwrite: Spark replaces only the partition
     * directories present in `df` at commit time; every other
     * partition's files are never touched. Callers upserting INTO the
-    * same table must break lineage (localCheckpoint) first — the
+    * same table must break lineage (MemoRegistry.cut) first — the
     * standard read-merge-overwrite discipline.
     */
   def overwritePartitions(df: org.apache.spark.sql.DataFrame, ref: DatasetRef,

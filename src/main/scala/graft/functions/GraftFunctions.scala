@@ -51,27 +51,18 @@ object GraftFunctions {
 
   /** tokenHash reduced mod 1e9+7 (keeps a*h+b inside 2^63). */
   val HashP = 1000000007L
-  def tokenHashP(c: Column): Column = tokenHash(c) % HashP
 
   /** Whitespace tokens of trimmed, lowercased text. */
   def tokens(c: Column): Column = split(lower(trim(c)), "\\s+")
 
-  /** Word n-gram shingles of a token array, joined with ''. */
-  def shingles(toks: Column, n: Int): Column =
-    filter(
-      transform(toks, (_, i) =>
-        when(i <= size(toks) - n,
-          concat_ws("", slice(toks, i + lit(1), lit(n))))),
-      _.isNotNull)
-
   /** Hashed shingles via the native ShingleHash48 expression.
     *
-    * NOTE: do NOT express this as `transform(shingles(...),
-    * tokenHash)` — Spark 4.1 mis-binds a lambda applied over the
-    * output of a chained indexed-transform + filter (observed: md5
-    * of the element returns the wrong digest), and even hashing
-    * post-explode of the HOF's strings read corrupted UTF8String
-    * buffers. The native expression hashes inside one per-row loop
+    * NOTE: do NOT express this as a `tokenHash` lambda over an
+    * indexed `transform` + `filter` shingle array — Spark 4.1
+    * mis-binds a lambda applied over the output of a chained
+    * indexed-transform + filter (observed: md5 of the element returns
+    * the wrong digest), and even hashing post-explode of the HOF's
+    * strings read corrupted UTF8String buffers. The native expression hashes inside one per-row loop
     * (also ~10x faster than the interpreted lambda chain).
     */
   def shingleHashes(toks: Column, n: Int): Column =

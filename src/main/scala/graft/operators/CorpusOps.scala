@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.MemoRegistry.{cut, shared}
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -188,32 +189,22 @@ object CorpusOps {
     * each ranking once. Lineage-cut with the reliable-checkpoint
     * discipline; every process invocation still computes from the
     * parquet inputs, and all consumer oracle outputs are
-    * byte-identical.
+    * byte-identical. [[tfBase]] is (doc_id, term, tf), the retrieval
+    * index table.
     */
-  private def memoCutR(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  private val tfMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  /** (doc_id, term, tf) — the retrieval index table. */
   private[graft] def tfBase(s: SparkSession, dir: String): DataFrame =
-    tfMemo.getOrElseUpdate((s, dir), memoCutR(
+    shared("tfBase", s, dir)(cut(
       Tables.documents(s, dir)
         .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
         .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))))
 
-  private val bm25Memo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private def bm25FixtureBase(s: SparkSession, dir: String): DataFrame =
-    bm25Memo.getOrElseUpdate((s, dir), {
+    shared("bm25FixtureBase", s, dir) {
       import s.implicits._
       val qterms = Bm25Queries.toDF("qid", "qtext")
         .select(col("qid"), explode(tokens(col("qtext"))).as("term"))
-      memoCutR(bm25TopKFor(s, dir, qterms))
-    })
+      cut(bm25TopKFor(s, dir, qterms))
+    }
 
   def qBm25Search(s: SparkSession, dir: String): DataFrame =
     bm25FixtureBase(s, dir)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoRegistry.{cut, shared}
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -221,7 +222,7 @@ object Curation {
     // explode ran per consumer
     val exploded = Tables.documents(s, dir)
       .select(col("doc_id"), explode(chunkHashes("text")).as("ch"))
-      .localCheckpoint()
+      .transform(cut)
     val counts = exploded.groupBy(col("ch")).agg(count(lit(1)).as("n_occ"))
     exploded.join(counts, "ch")
       .groupBy(col("doc_id"))
@@ -270,7 +271,7 @@ object Curation {
     // the chunk table (position explode + prefix-sum window + the
     // collect_list reassembly) feeds the occurrence count AND the
     // join back — cut once (r16 §8)
-    val chunks = cdcChunks(Tables.documents(s, dir)).localCheckpoint()
+    val chunks = cut(cdcChunks(Tables.documents(s, dir)))
     val occ = chunks.groupBy(col("ch")).agg(count(lit(1)).as("n_occ"))
     chunks.join(occ, "ch")
       .groupBy(col("doc_id"))
@@ -721,7 +722,7 @@ object Curation {
     val cnt = seed.groupBy(col("f")).agg(
       sum(when(col("role") === "hq", 1L).otherwise(0L)).as("ct"),
       sum(when(col("role") === "lq", 1L).otherwise(0L)).as("cb"))
-      .localCheckpoint()
+      .transform(cut)
     // seed totals derive from the ≤QcClassBuckets-row count table —
     // NOT by re-tokenizing the seed docs (r6 advice: `tot` was a
     // third full tokenize pass; now tokenization runs twice — once
@@ -967,20 +968,15 @@ object Curation {
     * every process invocation still computes it from the parquet
     * inputs, and all three oracle outputs are byte-identical.
     */
-  private val runFullMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private def runFullBase(s: SparkSession, dir: String): DataFrame =
-    runFullMemo.getOrElseUpdate((s, dir), {
+    shared("runFullBase", s, dir) {
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("text"))
       val doubled = docs.unionByName(docs.select(
         (col("doc_id") + Dedup.Shift).as("doc_id"), col("source"), col("text")))
-      val run = curationRunFull(doubled,
-        docs.filter(col("doc_id") % 100 === 0).select(col("doc_id"), col("text")))
-      if (s.sparkContext.getCheckpointDir.isDefined) run.checkpoint()
-      else run.localCheckpoint()
-    })
+      cut(curationRunFull(doubled,
+        docs.filter(col("doc_id") % 100 === 0).select(col("doc_id"), col("text"))))
+    }
 
   def qCurationRunFull(s: SparkSession, dir: String): DataFrame =
     runFullBase(s, dir)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoRegistry.{cut, shared}
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -171,7 +172,7 @@ object Dedup {
     // banding) re-executed up to four times per pair generation. The
     // band frame is docs × bands rows of (id, int, hash) — orders of
     // magnitude narrower than the signature pass that produces it.
-    val bands = memoCut(bands0)
+    val bands = cut(bands0)
     // Hot buckets found with a partial-aggregated groupBy (the
     // shuffle carries one row per DISTINCT bucket, not per member —
     // a per-bucket window would total-sort the whole band set) and
@@ -214,7 +215,7 @@ object Dedup {
     // cut once: consumed by the hot aggregation and three times via
     // `marked` (both self-join sides + the star branch) — the same
     // multi-consumer shape as pairsFromBands
-    val chunks = memoCut(simhash(docs).select(col("doc_id"), col("simhash"),
+    val chunks = cut(simhash(docs).select(col("doc_id"), col("simhash"),
       explode(sequence(lit(0), lit(3))).as("c"))
       .withColumn("cv", expr("shiftright(simhash, 12 * c) & 4095")))
     val hot = chunks.groupBy(col("c"), col("cv"))
@@ -266,7 +267,7 @@ object Dedup {
     */
   private def ngramJaccardVerify(cand: DataFrame, d0: DataFrame,
                                  threshold: Double): DataFrame = {
-    val d = memoCut(d0)
+    val d = cut(d0)
     cand.join(d.toDF("doc_a", "hs_a"), Seq("doc_a"))
       .join(d.toDF("doc_b", "hs_b"), Seq("doc_b"))
       .withColumn("inter", size(array_intersect(col("hs_a"), col("hs_b"))))
@@ -574,19 +575,11 @@ object Dedup {
   /** Dedup resolution: near-dup pairs → connected components, so
     * each duplicate cluster keeps one canonical doc (the minimum
     * id). Iterative min-label propagation — converges in
-    * O(log(diameter)) joins, the standard Spark formulation;
-    * localCheckpoint truncates the loop's lineage. Matches the
-    * transitive closure (oracle: recursive CTE).
+    * O(log(diameter)) joins, the standard Spark formulation; a
+    * [[graft.MemoRegistry.cut]] per iteration truncates the loop's
+    * lineage. Matches the transitive closure (oracle: recursive CTE).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = pairs.sparkSession
-    // Lineage cut per iteration: RELIABLE checkpoints (HDFS-durable,
-    // executor-loss-safe — what a 100 TB run needs) whenever a
-    // checkpoint dir is configured; executor-memory localCheckpoint
-    // as the single-box fallback.
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     def labelSum(df: DataFrame): BigDecimal = BigDecimal(
       df.agg(coalesce(sum(col("component_id").cast("decimal(38,0)")), lit(0))
         .cast("decimal(38,0)")).collect()(0).getDecimal(0))
@@ -638,10 +631,6 @@ object Dedup {
     */
   private[graft] def connectedComponentsLSRounds(pairs: DataFrame,
                                                  maxIter: Int = 50): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     def checksum(e: DataFrame): (Long, BigDecimal) = {
       val r = e.agg(count(lit(1)),
         coalesce(sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")),
@@ -1031,7 +1020,7 @@ object Dedup {
     val base = docs.select(col("doc_id"),
         posexplode(shingleHashes(tokens(col("text")), 3)).as(Seq("pos", "h")))
       .select(col("doc_id"), col("pos"), (col("h") % HashP).as("hp"))
-      .localCheckpoint()
+      .transform(cut)
     val variants: Seq[(Long, org.apache.spark.sql.Column)] = Seq(
       1L -> (col("pos") % 2 =!= 0), // keep 1/2  → J ≈ 0.5
       2L -> (col("pos") % 3 =!= 0), // keep 2/3  → J ≈ 0.67
@@ -1042,7 +1031,7 @@ object Dedup {
         .select((col("doc_id") + lit(m * Shift)).as("doc_id"),
           col("pos"), col("hp"))
     }.reduce(_ unionAll _)
-    val fixture = base.unionAll(mutants).localCheckpoint()
+    val fixture = cut(base.unionAll(mutants))
     // exact Jaccard per constructed pair: mutant hp-set ⊆ original
     // hp-set, so |∩| = |mutant|, |∪| = |original|
     val sizes = fixture.groupBy(col("doc_id"))
@@ -1054,7 +1043,7 @@ object Dedup {
           (col("doc_id") % Shift).as("doc_a"), col("nset").as("n_mut")),
         "doc_a")
       .filter(col("n_mut") >= col("n_orig") * threshold)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
+      .select(col("doc_a"), col("doc_b")).transform(cut)
     val nTrue = truth.count().toDouble
     // An empty truth set means the fixture is degenerate (e.g. empty
     // corpus): recall against no evidence must fail loudly, or the
@@ -1064,10 +1053,9 @@ object Dedup {
     val sigs = (0 until NumPerm).map(k =>
       min((col("hp") * A(k) + B(k)) % HashP).as(s"h$k"))
     val sig = fixture.groupBy(col("doc_id")).agg(sigs.head, sigs.tail: _*)
-      .localCheckpoint()
+      .transform(cut)
     configs.map { cfg =>
-      val cand = pairsFromBands(minhashBandsWith(sig, cfg.bands, cfg.rows))
-        .localCheckpoint()
+      val cand = cut(pairsFromBands(minhashBandsWith(sig, cfg.bands, cfg.rows)))
       val hit = cand.join(truth, Seq("doc_a", "doc_b"), "left_semi").count()
       MinhashSweepPoint(cfg, cand.count(), hit / nTrue)
     }
@@ -1139,7 +1127,7 @@ object Dedup {
     // derivation + final join) — uncut, each consumer re-ran the
     // tokenize+explode+distinct / the whole candidate self-join
     // unless exchange reuse happened to fire (r16, guide §5)
-    val tok = memoCut(docs
+    val tok = cut(docs
       .select(col("doc_id"),
         explode(shingleHashes(tokens(col("text")), SpanShingle)).as("h"))
       .distinct())
@@ -1164,7 +1152,7 @@ object Dedup {
     // positions. Hence inter ≤ shared + min(sz_a − lpa, sz_b − lpb)
     // — an exact upper bound; pairs that cannot reach α are pruned
     // BEFORE the verify join fans out by doc length.
-    val cand = memoCut(prefix.toDF("doc_a", "h", "pos_a", "sz_a")
+    val cand = cut(prefix.toDF("doc_a", "h", "pos_a", "sz_a")
       .join(prefix.toDF("doc_b", "hb", "pos_b", "sz_b"),
         col("h") === col("hb") && col("doc_a") < col("doc_b") &&
           lit(tauPpm) * greatest(col("sz_a"), col("sz_b")) <=
@@ -1218,7 +1206,7 @@ object Dedup {
     // corpus set table: 4 consumers (size agg, df agg, candidate
     // posting join, verify join); incoming set table: 2 (rank,
     // verify) — cut once each, the prefixJoinPairs r16 discipline
-    def sets(docs: DataFrame) = memoCut(docs
+    def sets(docs: DataFrame) = cut(docs
       .select(col("doc_id"),
         explode(shingleHashes(tokens(col("text")), SpanShingle)).as("h"))
       .distinct())
@@ -1236,7 +1224,7 @@ object Dedup {
       .filter(col("pos") <=
         col("sz") - expr(s"($tauPpm * sz + 999999) div 1000000") + 1)
       .select(col("doc_id"), col("h"), col("sz"))
-    val cand = memoCut(prefix.toDF("new_doc", "h", "sz_n")
+    val cand = cut(prefix.toDF("new_doc", "h", "sz_n")
       .join(corp.toDF("old_doc", "h"), Seq("h"))
       .join(corpSz.toDF("old_doc", "sz_o"), Seq("old_doc"))
       .filter(lit(tauPpm) * greatest(col("sz_n"), col("sz_o")) <=
@@ -1265,13 +1253,6 @@ object Dedup {
 
   // --- queries --------------------------------------------------------
 
-  /** Lineage cut with the reliable-checkpoint discipline of
-    * [[connectedComponents]] — the memoized shared stages below use it.
-    */
-  private def memoCut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   /** Memoized shared stages per (session, dir) — the louvainBase
     * discipline applied to the dedup family (r15 optimization).
     * qDedupMinhash, qDedupComponents, qDedupComponentsLs, qDedupApply,
@@ -1288,49 +1269,30 @@ object Dedup {
     * from the parquet inputs; all consumer oracle outputs are
     * byte-identical.
     */
-  private val pairsMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private[graft] def minhashPairsBase(s: SparkSession, dir: String): DataFrame =
-    pairsMemo.getOrElseUpdate((s, dir), memoCut(minhashPairs(corpus(s, dir))))
-
-  private val compsMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
+    shared("minhashPairsBase", s, dir)(cut(minhashPairs(corpus(s, dir))))
 
   /** Min-label components of [[minhashPairsBase]] — the loop output is
     * already lineage-cut per iteration, so no extra cut is needed.
     */
   private[graft] def componentsBase(s: SparkSession, dir: String): DataFrame =
-    compsMemo.getOrElseUpdate((s, dir),
-      connectedComponents(minhashPairsBase(s, dir)))
-
-  private val wjPostMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  private[graft] def wjPostingsBase(s: SparkSession, dir: String): DataFrame =
-    wjPostMemo.getOrElseUpdate((s, dir), memoCut(wjPostings(corpus(s, dir))))
-
-  private val wjCntMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
+    shared("componentsBase", s, dir)(connectedComponents(minhashPairsBase(s, dir)))
 
   private[graft] def wjCountsBase(s: SparkSession, dir: String): DataFrame =
-    wjCntMemo.getOrElseUpdate((s, dir), memoCut(wjCounts(corpus(s, dir))))
+    shared("wjCountsBase", s, dir)(cut(wjCounts(corpus(s, dir))))
 
-  private val wjCandMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  /** The df-rarest-prefix candidate pairs over [[wjPostingsBase]] —
+  /** The df-rarest-prefix candidate pairs over the 5-gram postings —
     * [[shingleMinBlock]] on the shared postings.
     */
   private[graft] def wjCandBase(s: SparkSession, dir: String): DataFrame =
-    wjCandMemo.getOrElseUpdate((s, dir), {
-      val pf = wjPrefixKeys(wjPostingsBase(s, dir))
-      memoCut(pf.toDF("doc_a", "h")
+    shared("wjCandBase", s, dir) {
+      val pf = wjPrefixKeys(cut(wjPostings(corpus(s, dir))))
+      cut(pf.toDF("doc_a", "h")
         .join(pf.toDF("doc_b", "h"), Seq("h"))
         .filter(col("doc_a") < col("doc_b"))
         .select(col("doc_a"), col("doc_b"))
         .distinct())
-    })
+    }
 
   def qDedupExact(s: SparkSession, dir: String): DataFrame =
     exact(Tables.documents(s, dir))
@@ -1563,7 +1525,7 @@ object Dedup {
       s"segment scheme is sized for k=$EditMaxK (k+1 segments)")
     // the key frame feeds BOTH join sides (index segments + probes);
     // uncut, each side re-ran editKeys' normalize+key pass (r16)
-    val keys = memoCut(withLen(docs))
+    val keys = cut(withLen(docs))
     val segs = editSegments(keys).toDF("doc_a", "key_a", "len_a", "i", "seg")
     val probe = editProbes(keys).toDF("doc_b", "key_b", "lr", "i", "sub")
     // verify BEFORE the dedup exchange: the banded levenshtein

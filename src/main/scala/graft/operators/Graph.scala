@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoRegistry.{cut, shared}
 import graft.functions.GraftFunctions.tokenHash
 import graft.sources.Tables
 
@@ -22,11 +23,10 @@ import graft.sources.Tables
   * iterations unrolled as CTEs) agrees bit-for-bit, the established
   * quantize-before-aggregate idiom.
   *
-  * Fault posture (r7 verdict #5): each iteration's frame rides the
-  * reliable-`cut()` discipline shared with Dedup.connectedComponents
-  * and the DocStreams foreachBatch bodies — a durable checkpoint
-  * whenever the context has a checkpoint dir, so a lost executor
-  * replays one iteration, not the whole chain; localCheckpoint stays
+  * Fault posture (r7 verdict #5): each iteration's frame is cut by
+  * [[graft.MemoRegistry.cut]] — a durable checkpoint whenever the
+  * context has a checkpoint dir, so a lost executor replays one
+  * iteration, not the whole chain; an executor-memory checkpoint is
   * the single-box fallback. The per-iteration edge⋈deg frame is
   * persisted for the loop and unpersisted before returning.
   */
@@ -52,14 +52,6 @@ object Graph {
         .select(col("doc_id").as("src"),
           ((col("doc_id") * 13 + 5) % n).as("dst")))
       .distinct()
-
-  /** Lineage cut shared with Dedup.connectedComponents: reliable
-    * checkpoint when the context has a checkpoint dir (executor-loss
-    * safe on a cluster), localCheckpoint otherwise.
-    */
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** PageRank with dangling-mass redistribution: per iteration, the
     * rank mass sitting on sink nodes is collected by ONE scalar
@@ -646,11 +638,8 @@ object Graph {
     * the memoized final labels frame re-executes for free). Both
     * oracle outputs are byte-identical.
     */
-  private val lpaMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private[graft] def lpaBase(s: SparkSession, dir: String): DataFrame =
-    lpaMemo.getOrElseUpdate((s, dir), {
+    shared("lpaBase", s, dir) {
       val docs = Tables.documents(s, dir).select(col("doc_id"))
       val n = docs.count()
       val e = triEdges(docs, n).filter(col("src") =!= col("dst"))
@@ -658,7 +647,7 @@ object Graph {
         .unionAll(e.select(col("dst").as("u"), col("src").as("v")))
         .distinct().persist()
       try lpaLabels(docs, und) finally { und.unpersist(); () }
-    })
+    }
 
   def qLabelProp(s: SparkSession, dir: String): DataFrame = {
     val lab = lpaBase(s, dir)
@@ -838,12 +827,9 @@ object Graph {
     * per-rung oracle outputs are byte-identical to the unshared
     * form (same deterministic ascent, same frames).
     */
-  private val louvainMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, Long, DataFrame)])
-
   private[graft] def louvainBase(s: SparkSession, dir: String)
       : (DataFrame, Long, DataFrame) =
-    louvainMemo.getOrElseUpdate((s, dir), {
+    shared("louvainBase", s, dir) {
       val docs = Tables.documents(s, dir).select(col("doc_id"))
       val n = docs.count()
       val e = triEdges(docs, n).filter(col("src") =!= col("dst"))
@@ -851,7 +837,7 @@ object Graph {
         .unionAll(e.select(col("dst").as("u"), col("src").as("v")))
         .distinct())
       (und, und.count(), cut(louvainLabels(docs, und)))
-    })
+    }
 
   /** Louvain communities over the ring-chord fixture — the same
     * output contract as [[qLabelProp]] (doc_id, community,
@@ -968,14 +954,11 @@ object Graph {
     * selection + the large-star/small-star CC on identical input).
     * Outputs are byte-identical: the relabel is deterministic.
     */
-  private val refinedMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private[graft] def refinedBase(s: SparkSession, dir: String): DataFrame =
-    refinedMemo.getOrElseUpdate((s, dir), {
+    shared("refinedBase", s, dir) {
       val (und, _, lab) = louvainBase(s, dir)
       cut(refineByComponents(und, lab))
-    })
+    }
 
   def qLouvainConnectivity(s: SparkSession, dir: String): DataFrame = {
     refinedBase(s, dir)
@@ -1155,13 +1138,8 @@ object Graph {
     * The loops' per-step frames are already lineage-cut; the memo
     * shares the composed corpus. Outputs byte-identical.
     */
-  private val walksMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-  private val n2vMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private[graft] def walksBase(s: SparkSession, dir: String): DataFrame =
-    walksMemo.getOrElseUpdate((s, dir), walks(s, dir))
+    shared("walksBase", s, dir)(walks(s, dir))
 
   def qRandomWalks(s: SparkSession, dir: String): DataFrame =
     walksBase(s, dir)
@@ -1210,7 +1188,7 @@ object Graph {
     * graph.
     */
   def qNode2vecWalks(s: SparkSession, dir: String): DataFrame =
-    n2vMemo.getOrElseUpdate((s, dir), node2vecWalksPlan(s, dir))
+    shared("qNode2vecWalks", s, dir)(node2vecWalksPlan(s, dir))
 
   private def node2vecWalksPlan(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
@@ -1417,11 +1395,8 @@ object Graph {
     * is HopT+1 driver-local rows, re-execution is free by
     * construction). Both oracle outputs are byte-identical.
     */
-  private val hopMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   def qHopPlot(s: SparkSession, dir: String): DataFrame =
-    hopMemo.getOrElseUpdate((s, dir), {
+    shared("qHopPlot", s, dir) {
       import s.implicits._
       val docs = Tables.documents(s, dir).select(col("doc_id"))
       val n = docs.count()
@@ -1451,7 +1426,7 @@ object Graph {
         counts += ((t.toLong, total))
       }
       counts.toSeq.toDF("t", "n_pairs")
-    })
+    }
 
   /** Effective-diameter percentile (90). */
   val EffDiamPct = 90L
@@ -1825,14 +1800,11 @@ object Graph {
     * feeds both the SCC labeling and the bow-tie classification).
     * The closure loop's output is already lineage-cut per round.
     */
-  private val sccMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private[graft] def sccReach(s: SparkSession, dir: String): DataFrame =
-    sccMemo.getOrElseUpdate((s, dir), {
+    shared("sccReach", s, dir) {
       val docs = Tables.documents(s, dir).select(col("doc_id"))
       transitiveClosure(sccEdges(docs, docs.count()))
-    })
+    }
 
   def qScc(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
@@ -1852,7 +1824,7 @@ object Graph {
   def qBowtie(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     val reach = sccReach(s, dir)
-    val scc = sccFromClosure(docs, reach).localCheckpoint()
+    val scc = cut(sccFromClosure(docs, reach))
     // the giant SCC's id: one bounded driver scalar
     val coreId = scc.groupBy(col("scc_id")).agg(count(lit(1)).as("sz"))
       .orderBy(col("sz").desc, col("scc_id")).limit(1)

@@ -110,16 +110,6 @@ object Layout {
       .drop("__hx", "__hy", "__hd", "__rx", "__ry", "__nx", "__ny")
   }
 
-  /** Rows laid out along the Hilbert curve of (a, b) — the zOrdered
-    * twin with the continuous curve.
-    */
-  def hilbertOrdered(df: DataFrame, a: Column, b: Column,
-                     partitions: Int): DataFrame =
-    hilbertCols(df, a, b, Bits, "__h")
-      .repartitionByRange(partitions, col("__h"))
-      .sortWithinPartitions(col("__h"))
-      .drop("__h")
-
   /** events keyed the same way as [[qZorder]], Hilbert-indexed. */
   def qHilbert(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)

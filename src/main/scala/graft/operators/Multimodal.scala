@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoRegistry.{cut, shared}
+
 /** Multimodal columns: media as opaque binary payloads + typed
   * metadata, with batched per-partition decode plumbing.
   *
@@ -392,15 +394,8 @@ object Multimodal {
     * Each process invocation still computes it from the parquet
     * inputs; both oracle outputs are byte-identical.
     */
-  private val phashMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private def phashBase(s: SparkSession, dir: String): DataFrame =
-    phashMemo.getOrElseUpdate((s, dir), {
-      val ph = imagePhash(phashFixtureTable(s, dir)).toDF()
-      if (s.sparkContext.getCheckpointDir.isDefined) ph.checkpoint()
-      else ph.localCheckpoint()
-    })
+    shared("phashBase", s, dir)(cut(imagePhash(phashFixtureTable(s, dir)).toDF()))
 
   def qImagePhash(s: SparkSession, dir: String): DataFrame =
     phashPairs(phashBase(s, dir))

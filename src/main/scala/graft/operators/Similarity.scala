@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoRegistry.cut
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -172,11 +173,11 @@ object Similarity {
   def nearDupSweep(emb: DataFrame, rungs: Seq[Int],
                    threshold: Double = NearDupAuditThreshold): Seq[NearDupSweepPoint] = {
     val fixture = corpus(emb)
-    val truth = exactNearDupPairs(fixture, threshold).localCheckpoint()
+    val truth = cut(exactNearDupPairs(fixture, threshold))
     val nTrue = truth.count()
     rungs.map { pb =>
       val got = approxNearDupPairs(fixture, threshold, pb)
-        .select(col("vec_a"), col("vec_b")).localCheckpoint()
+        .select(col("vec_a"), col("vec_b")).transform(cut)
       val hit = got.join(truth, Seq("vec_a", "vec_b"), "left_semi").count()
       NearDupSweepPoint(pb,
         if (nTrue == 0) 1.0 else hit.toDouble / nTrue, got.count(), nTrue)
@@ -514,7 +515,7 @@ object Similarity {
 
   def bqSweep(emb: DataFrame, pools: Seq[Int]): Seq[BqSweepPoint] = {
     val exact = bruteTopK(emb)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")).transform(cut)
     val exactN = exact.count().toDouble
     val nQ = defaultQueries(emb).count()
     pools.map { p =>
@@ -699,10 +700,6 @@ object Similarity {
       val dot = dotQ(q, typedlit(pl(j).toSeq))
       when(dot > 0, lit(1L << j)).otherwise(lit(0L))
     }.reduce(_ + _)
-
-  /** Sign-bucket of a quantized vector in LSH table `t`. */
-  def lshBucket(q: org.apache.spark.sql.Column, t: Int): org.apache.spark.sql.Column =
-    lshBucketWith(q, planes(t))
 
   /** (vec_id, label, q, nq, tbl, bucket) — one row per LSH table,
     * for an arbitrary table/plane configuration.
@@ -1047,7 +1044,7 @@ object Similarity {
   def ivfScaledSweep(emb: DataFrame, configs: Seq[IvfScaledConfig],
                      k: Int = TopK): Seq[IvfScaledSweepPoint] = {
     val exact = bruteTopK(emb, k)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")).transform(cut)
     val exactN = exact.count().toDouble
     val all = quantized(emb)
     val n = emb.count()
@@ -1058,7 +1055,7 @@ object Similarity {
       val cands = ivfCandidatesFor(all, centroidsFor(all, cfg.quantizer, stride),
         qs, excludeSelf = true,
         nprobe = math.max(NProbe, (c / math.max(1, cfg.probeDiv)).toInt))
-        .localCheckpoint()
+        .transform(cut)
       val nc = cands.count()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
@@ -1368,7 +1365,7 @@ object Similarity {
     try {
       var cents = seedCentroidsWith(a, stride)
       for (_ <- 1 to iters) cents = lloydIter(a, cents)
-      cents.localCheckpoint()
+      cut(cents)
     } finally { a.unpersist(); () }
   }
 
@@ -1378,8 +1375,7 @@ object Similarity {
     * MaxTrainIters. The convergence check is a scalar aggregate
     * (O(1) on the driver, the connectedComponents pattern); each
     * iteration's centroid table is checkpointed so the loop's
-    * lineage stays flat — reliable checkpoint when a checkpoint dir
-    * is set (the cluster answer), localCheckpoint otherwise. The
+    * lineage stays flat ([[graft.MemoRegistry.cut]]). The
     * oracle unrolls MaxTrainIters iterations in CTEs, derives each
     * movement, and picks the FIRST converged iteration — replicating
     * the data-dependent stopping rule, not a fixed count.
@@ -1399,18 +1395,15 @@ object Similarity {
                                        maxIters: Int = MaxTrainIters,
                                        epsQ: Long = ConvergeEpsQ,
                                        stride: Long = SeedMod): (DataFrame, Int) = {
-    def pin(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     // pin the training set across the convergence sweeps (see
     // trainCentroids — one corpus read instead of one per iteration)
     val a = all.persist()
     try {
-    var cents = pin(seedCentroidsWith(a, stride))
+    var cents = cut(seedCentroidsWith(a, stride))
     var it = 0
     var done = false
     while (it < maxIters && !done) {
-      val next = pin(lloydIter(a, cents))
+      val next = cut(lloydIter(a, cents))
       val movedRow = next
         .join(cents.select(col("cid"), col("cq").as("cq_old")), "cid")
         .select(expr(
@@ -1447,16 +1440,6 @@ object Similarity {
     val all = quantized(emb)
     searchIvf(all, trainCentroidsConverged(all), k)
   }
-
-  def ivfTrainedTopKFor(emb: DataFrame, queries: DataFrame, k: Int = TopK,
-                        broadcastQueries: Boolean = true,
-                        excludeSelf: Boolean = false): DataFrame =
-    ivfTopKFor(emb, queries, k, broadcastQueries, excludeSelf, Trained)
-
-  def ivfConvergedTopKFor(emb: DataFrame, queries: DataFrame, k: Int = TopK,
-                          broadcastQueries: Boolean = true,
-                          excludeSelf: Boolean = false): DataFrame =
-    ivfTopKFor(emb, queries, k, broadcastQueries, excludeSelf, Converged)
 
   /** Retrieve-then-rerank (SURVEY §7 r3): stage 1 retrieves RerankPool
     * candidates per query from the LSH tables by quantized cosine
@@ -1680,11 +1663,11 @@ object Similarity {
         struct(col("ccos"), (-col("cid")).cast("double").as("neg"))).as("best"))
       .select(col("vec_id"), col("best").getField("cid").as("cid"),
         col("best").getField("q").as("q"), col("best").getField("nq").as("nq"))
-      .localCheckpoint()
+      .transform(cut)
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cid"))
     val rankedProbes = scored.filter(col("vec_id") % QueryMod === 0)
-      .withColumn("crn", row_number().over(wq)).localCheckpoint()
+      .withColumn("crn", row_number().over(wq)).transform(cut)
     probes.map { p =>
       val pr = rankedProbes.filter(col("crn") <= p)
         .select(col("vec_id").as("query_id"), col("cid"),
@@ -1842,7 +1825,7 @@ object Similarity {
                 excludeSelf: Boolean = false, trainIters: Int = 0): DataFrame = {
     val norm = normalizedQ(emb)
     var cb = pqCodebook(norm)
-    for (_ <- 1 to trainIters) cb = pqTrainCodebook(norm, cb).localCheckpoint()
+    for (_ <- 1 to trainIters) cb = cut(pqTrainCodebook(norm, cb))
     val codes = pqEncode(norm, cb)
     val luts = broadcast(pqLuts(normalizedQ(queries), cb))
     val w = org.apache.spark.sql.expressions.Window
@@ -1968,7 +1951,7 @@ object Similarity {
     // (measured: training the PQ codebook helps, +0.15 recall at
     // pool 50, unlike coarse-quantizer training — see pqPoolSweep)
     var cb = pqCodebook(norm)
-    for (_ <- 1 to pqTrainIters) cb = pqTrainCodebook(norm, cb).localCheckpoint()
+    for (_ <- 1 to pqTrainIters) cb = cut(pqTrainCodebook(norm, cb))
     // corpus side: coarse assignment + PQ codes, one row per vector
     val assigned = all.join(broadcast(cents))
       .withColumn("ccos", cosine(dotQ(col("q"), col("cq")), col("nq"), col("cnq")))
@@ -2090,9 +2073,9 @@ object Similarity {
       .join(broadcast(centsN), "cid")
       .select(col("vec_id"), col("cid"),
         zip_with(col("qn"), col("cqn"), (a, b) => a - b).as("qn"))
-      .localCheckpoint()
+      .transform(cut)
     var cb = pqCodebook(resid)
-    for (_ <- 1 to pqTrainIters) cb = pqTrainCodebook(resid, cb).localCheckpoint()
+    for (_ <- 1 to pqTrainIters) cb = cut(pqTrainCodebook(resid, cb))
     val codes = pqEncode(resid, cb)
       .join(resid.select(col("vec_id"), col("cid")), "vec_id")
     // query side: NProbe nearest lists, then one residual LUT per
@@ -2174,7 +2157,7 @@ object Similarity {
                   trainIters: Int = 0): Seq[PqSweepPoint] = {
     val adc = pqTopKFor(emb, defaultQueries(emb), pools.max,
         excludeSelf = true, trainIters = trainIters)
-      .select(col("query_id"), col("neighbor_id"), col("rnk")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id"), col("rnk")).transform(cut)
     val exact = bruteTopK(emb, k).select(col("query_id"), col("neighbor_id"))
     val exactN = exact.count().toDouble
     pools.map { p =>
@@ -2359,9 +2342,7 @@ object Similarity {
     // k·n scalar rows (r15 optimization; output unchanged).
     val t = topk.select(col("query_id").as("vec_a"),
       col("neighbor_id").as("vec_b"), col("cos_sim"))
-    val fwd =
-      if (t.sparkSession.sparkContext.getCheckpointDir.isDefined) t.checkpoint()
-      else t.localCheckpoint()
+    val fwd = cut(t)
     val rev = fwd.filter(col("vec_a") > col("vec_b"))
       .select(col("vec_b").as("vec_a"), col("vec_a").as("vec_b"))
     fwd.filter(col("vec_a") < col("vec_b"))
@@ -2463,11 +2444,11 @@ object Similarity {
     // this cut the composed path re-ran it every round — measured
     // 13.6× at 10× rows, 4.3× with it)
     val qs = quantized(queries).toDF("query_id", "label_q", "q_q", "nq_q")
-      .select(col("query_id"), col("q_q"), col("nq_q")).localCheckpoint()
+      .select(col("query_id"), col("q_q"), col("nq_q")).transform(cut)
     val adj = graphEdges
       .select(col("vec_a").as("src"), col("vec_b").as("dst"))
       .unionAll(graphEdges.select(col("vec_b").as("src"), col("vec_a").as("dst")))
-      .localCheckpoint()
+      .transform(cut)
     // score a tiny (query_id, vec_id) frame: corpus and query vectors
     // are consumed map-side off broadcast joins; only scalars leave
     def score(cand: DataFrame): DataFrame =
@@ -2479,7 +2460,7 @@ object Similarity {
     val entries = emb.filter(col("vec_id") % stride === 0)
       .select(col("vec_id"))
     val cand0 = qs.select(col("query_id")).crossJoin(broadcast(entries))
-    var visited = score(cand0).localCheckpoint()
+    var visited = cut(score(cand0))
     // entry points are scored but NOT yet expanded — round 1's
     // frontier is exactly the best entry points
     var expanded = cand0.select(col("query_id"), col("vec_id")).limit(0)
@@ -2490,7 +2471,7 @@ object Similarity {
       val frontier = beamTopPer(visited, beam)
         .select(col("query_id"), col("vec_id"))
         .join(expanded, Seq("query_id", "vec_id"), "left_anti")
-        .localCheckpoint()
+        .transform(cut)
       // every beam slot already expanded ⇒ greedy fixpoint (one
       // bounded driver scalar per round, the kcore loop discipline)
       if (frontier.limit(1).count() == 0) converged = true
@@ -2500,8 +2481,8 @@ object Similarity {
           .select(col("query_id"), col("dst").as("vec_id")).distinct()
           .join(visited.select(col("query_id"), col("vec_id")),
             Seq("query_id", "vec_id"), "left_anti")
-        expanded = expanded.unionAll(frontier).localCheckpoint()
-        visited = visited.unionAll(score(cand)).localCheckpoint()
+        expanded = cut(expanded.unionAll(frontier))
+        visited = cut(visited.unionAll(score(cand)))
       }
     }
     visited
@@ -2722,10 +2703,6 @@ object Similarity {
                      rounds: Int = NndRounds,
                      sample: Int = NndSample,
                      buildK: Int = NndBuildK): DataFrame = {
-    val spark = emb.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     val kb = math.max(k, buildK)
     val packed = cut(packedSide(emb))
     var adj = cut(topPerSrc(scorePairs(nndInitPairs(emb, packed, kb), packed), kb))
@@ -2792,16 +2769,11 @@ object Similarity {
     val exactN = math.max(1L, exactEdges.count()).toDouble
     configs.map { c =>
       val e = nnDescentEdges(emb, k, c.rounds, c.sample, c.buildK)
-        .select(col("vec_a"), col("vec_b")).localCheckpoint()
+        .select(col("vec_a"), col("vec_b")).transform(cut)
       NndSweepPoint(c, e.count(),
         e.join(exactEdges, Seq("vec_a", "vec_b")).count() / exactN)
     }
   }
-
-  def nndSweep(emb: DataFrame, configs: Seq[NndConfig],
-               k: Int = TopK): Seq[NndSweepPoint] =
-    nndSweepAgainst(emb,
-      knnServingEdges(emb, k).localCheckpoint(), configs, k)
 
   /** Recall-targeted auto-configuration of the NN-descent build (r13
     * verdict #2: the dial existed but had no autoconfig rung — a
@@ -2817,7 +2789,7 @@ object Similarity {
   def autoConfigNnd(emb: DataFrame, targetAgreement: Double = 0.85,
                     ladder: Seq[NndConfig] = DefaultNndLadder,
                     k: Int = TopK): Option[NndSweepPoint] = {
-    val exact = knnServingEdges(emb, k).localCheckpoint()
+    val exact = cut(knnServingEdges(emb, k))
     ladder.iterator.map(c => nndSweepAgainst(emb, exact, Seq(c), k).head)
       .find(_.agreement >= targetAgreement)
   }
@@ -2835,10 +2807,10 @@ object Similarity {
     * candidate mass next to the IVF posting-join mass it replaces.
     */
   def knnMassStats(emb: DataFrame): Seq[(String, Long)] = {
-    val packed = packedSide(emb).localCheckpoint()
+    val packed = cut(packedSide(emb))
     val n = packed.count()
     val adj = topPerSrc(scorePairs(nndInitPairs(emb, packed, NndBuildK), packed),
-        NndBuildK).localCheckpoint()
+        NndBuildK).transform(cut)
     val cand = nndCandidates(adj, NndSample, 1)
     val all = quantized(emb)
     val stride = scaledSeedStride(n)
@@ -2870,7 +2842,7 @@ object Similarity {
     val corpusSide = bucketedWith(quant, cfg.tables, cfg.planes)
       .select(col("tbl"), col("bucket"))
     val cOcc = corpusSide.groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("c")).localCheckpoint()
+      .agg(count(lit(1)).as("c")).transform(cut)
     def joinMassOf(qs: DataFrame): Long = {
       val qOcc = qs.groupBy(col("tbl"), col("bucket"))
         .agg(count(lit(1)).as("qc"))
@@ -2903,15 +2875,6 @@ object Similarity {
       "blind_join_rows" -> joinMassOf(qsBlind),
       "verified_pairs" -> verified)
   }
-
-  /** Harness instance: beam-serve the default query set over the
-    * exact-rung serving edges (isolates beam-search loss from
-    * graph-construction loss; compose with [[knnServingEdgesScaled]]
-    * for the end-to-end production path).
-    */
-  def graphAnnTopK(emb: DataFrame, beam: Int = BeamWidth): DataFrame =
-    graphAnnTopKFor(emb, knnServingEdges(emb), defaultQueries(emb),
-      beam = beam, excludeSelf = true)
 
   /** Incremental serving-graph maintenance — the HNSW insert, batch
     * form: beam-search each incoming vector's top-k over the EXISTING
@@ -2953,13 +2916,13 @@ object Similarity {
 
   def graphAnnSweep(emb: DataFrame, beams: Seq[Int]): Seq[BeamSweepPoint] = {
     val exact = bruteTopK(emb)
-      .select(col("query_id"), col("neighbor_id")).localCheckpoint()
+      .select(col("query_id"), col("neighbor_id")).transform(cut)
     val exactN = exact.count().toDouble
-    val graph = knnServingEdges(emb).localCheckpoint()
+    val graph = cut(knnServingEdges(emb))
     val qs = defaultQueries(emb)
     beams.map { b =>
       val visited = graphAnnVisited(emb, graph, qs, b, BeamRounds, 0L)
-        .localCheckpoint()
+        .transform(cut)
       val got = beamTopPer(visited.filter(col("vec_id") =!= col("query_id")),
           TopK)
         .select(col("query_id"), col("vec_id").as("neighbor_id"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation for hot join keys at cluster scale.
@@ -23,12 +23,4 @@ object Skew {
     val joinCols = Seq(key, "__salt")
     b.join(s, joinCols, "inner").drop("__salt")
   }
-
-  /** Top-N heaviest keys with their row counts — the diagnostic for
-    * picking salting candidates (one partial-aggregated pass).
-    */
-  def keyHistogram(df: DataFrame, key: Column, topN: Int = 20): DataFrame =
-    df.groupBy(key.as("key")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc, col("key"))
-      .limit(topN)
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.MemoRegistry.{cut, shared}
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -128,7 +129,7 @@ object TextAnalysis {
       sum(when(col("lang") === l, 1L).otherwise(0L)).as(s"c_$l"))
     val cnt = tok.filter(col("is_seed"))
       .groupBy(col("f")).agg(cntAggs.head, cntAggs.tail: _*)
-      .localCheckpoint()
+      .transform(cut)
     val totAggs = LangIdLangs.map(l =>
       bitLog(coalesce(sum(col(s"c_$l")), lit(0L)) + LangIdBuckets).as(s"n_$l"))
     val tot = cnt.agg(totAggs.head, totAggs.tail: _*)
@@ -269,12 +270,8 @@ object TextAnalysis {
     * the reliable-checkpoint discipline; both oracle outputs are
     * byte-identical.
     */
-  private val winnowMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
   private[graft] def winnowBase(s: SparkSession, dir: String): DataFrame =
-    winnowMemo.getOrElseUpdate((s, dir),
-      memoCutTok(winnowFingerprints(Tables.documents(s, dir))))
+    shared("winnowBase", s, dir)(cut(winnowFingerprints(Tables.documents(s, dir))))
 
   def qWinnow(s: SparkSession, dir: String): DataFrame =
     winnowBase(s, dir)
@@ -613,12 +610,7 @@ object TextAnalysis {
     // corpus-total aggregate AND the scoring join — without the cut
     // the corpus token explode + count re-executed for each (the
     // model table is vocab-sized, the cheapest thing to pin here)
-    val tf = {
-      val raw = tok.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      if (docs.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        raw.checkpoint()
-      else raw.localCheckpoint()
-    }
+    val tf = cut(tok.groupBy(col("term")).agg(count(lit(1)).as("cnt")))
     val total = tf.agg(sum(col("cnt")).as("total"))
     tok.join(tf, "term")
       .groupBy(col("doc_id"))
@@ -662,12 +654,7 @@ object TextAnalysis {
     // corpus count and the final labeling — three consumers, each of
     // which re-ran the whole lmScore train+score pipeline without it
     // (the "materialize lmScore once" posture the scaladoc promises)
-    val scores = {
-      val raw = lmScore(docs).select(col("doc_id"), col("typicality_ppm").as("t"))
-      if (docs.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        raw.checkpoint()
-      else raw.localCheckpoint()
-    }
+    val scores = cut(lmScore(docs).select(col("doc_id"), col("typicality_ppm").as("t")))
     val hist = scores.groupBy(col("t")).agg(count(lit(1)).as("freq"))
       .withColumn("coarse", floor(col("t")).cast("long"))
     val coarseTot = hist.groupBy(col("coarse")).agg(sum(col("freq")).as("ccnt"))
@@ -735,9 +722,7 @@ object TextAnalysis {
     // cells is consumed by the total and the final projection — cut
     // the (sources × 3)-sized frame so the corpus join + bucket
     // labeling run once (r16)
-    val cellsC =
-      if (s.sparkContext.getCheckpointDir.isDefined) cells.checkpoint()
-      else cells.localCheckpoint()
+    val cellsC = cut(cells)
     val tot = cellsC.agg(sum(col("wt")).as("tot_wt"),
       sum(col("n_tokens")).as("tot_tokens"))
     cellsC.crossJoin(broadcast(tot))
@@ -991,10 +976,7 @@ object TextAnalysis {
     * trained tokenizer applied to the vocabulary) — encode reuses it.
     */
   private def bpeTrainLoop(docs: DataFrame): (Seq[DataFrame], DataFrame) = {
-    def pin(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    var sym = pin(wordVocab(docs)
+    var sym = cut(wordVocab(docs)
       .withColumn("s", rtrim(regexp_replace(col("w"), "(.)", s"$Mk$$1$Mk "))))
     var steps: Seq[DataFrame] = Nil
     for (i <- 1 to BpeTrainSteps) {
@@ -1002,10 +984,10 @@ object TextAnalysis {
       // round's broadcast AND the rules union), and unpinned each
       // consumer re-ran the round's whole pair-count pass (r16,
       // guide §5 lineage discipline)
-      val top1 = pin(pairCountsMarked(sym)
+      val top1 = cut(pairCountsMarked(sym)
         .orderBy(col("cnt").desc, col("lhs"), col("rhs")).limit(1))
       steps = steps :+ top1.select(lit(i).as("step"), col("lhs"), col("rhs"), col("cnt"))
-      sym = pin(sym
+      sym = cut(sym
         .crossJoin(broadcast(top1.select(col("lhs").as("m_lhs"), col("rhs").as("m_rhs"))))
         .withColumn("s", org.apache.spark.sql.functions.replace(col("s"),
           concat(lit(Mk), col("m_lhs"), lit(Mk + " " + Mk), col("m_rhs"), lit(Mk)),
@@ -1027,18 +1009,11 @@ object TextAnalysis {
     * Every process invocation still trains from the parquet inputs;
     * all consumer oracle outputs are byte-identical.
     */
-  private val bpeMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)])
-
   private def bpeBase(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    bpeMemo.getOrElseUpdate((s, dir), {
+    shared("bpeBase", s, dir) {
       val (steps, sym) = bpeTrainLoop(Tables.documents(s, dir))
-      val merged = steps.reduce(_ unionAll _)
-      val cut =
-        if (s.sparkContext.getCheckpointDir.isDefined) merged.checkpoint()
-        else merged.localCheckpoint()
-      (cut, sym)
-    })
+      (cut(steps.reduce(_ unionAll _)), sym)
+    }
 
   def qBpeTrain(s: SparkSession, dir: String): DataFrame =
     bpeBase(s, dir)._1
@@ -1148,13 +1123,10 @@ object TextAnalysis {
   private[graft] def wordpieceEncodeWith(words: DataFrame,
                                              vocabIn: DataFrame,
                                              maxPiece: Int): DataFrame = {
-    def pin(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     // the trained vocab is pinned ONCE — every round's broadcast join
     // would otherwise re-run the gram-count + TakeOrdered ladder
-    val vocab = pin(vocabIn.withColumnRenamed("piece", "vp"))
-    var state = pin(words.select(col("w"), length(col("w")).as("len"),
+    val vocab = cut(vocabIn.withColumnRenamed("piece", "vp"))
+    var state = cut(words.select(col("w"), length(col("w")).as("len"),
       lit(0).as("pos"), lit(0L).as("np")))
     var r = 0
     var done = false
@@ -1169,7 +1141,7 @@ object TextAnalysis {
         .select(col("w"), col("L"), expr("substring(w, pos + 1, L)").as("piece"))
       val adv = cand.join(broadcast(vocab), col("piece") === col("vp"))
         .groupBy(col("w")).agg(max(col("L")).as("adv"))
-      state = pin(state.join(adv, Seq("w"), "left")
+      state = cut(state.join(adv, Seq("w"), "left")
         .select(col("w"), col("len"),
           when(col("pos") < col("len"),
             col("pos") + coalesce(col("adv"), lit(1))).otherwise(col("pos")).as("pos"),
@@ -1215,10 +1187,7 @@ object TextAnalysis {
     */
   private def wpTrainLoop(docs: DataFrame, steps: Int = WpTrainSteps)
       : Seq[DataFrame] = {
-    def pin(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    var sym = pin(wordVocab(docs)
+    var sym = cut(wordVocab(docs)
       .withColumn("s", rtrim(regexp_replace(col("w"), "(.)", s"$Mk$$1$Mk "))))
     var rules: Seq[DataFrame] = Nil
     for (i <- 1 to steps) {
@@ -1230,7 +1199,7 @@ object TextAnalysis {
       // estimate planned sort-merge, shuffling the pair table twice
       // per round — guide §3.1). The 1-row argmax is pinned for the
       // same two-consumer reason as bpeTrainLoop's.
-      val sc = pin(symCountsMarked(sym))
+      val sc = cut(symCountsMarked(sym))
       val scored = pairCountsMarked(sym)
         .filter(col("cnt") >= WpMinPairCnt)
         .join(broadcast(sc.toDF("lhs", "cl")), Seq("lhs"))
@@ -1238,7 +1207,7 @@ object TextAnalysis {
         .withColumn("score_ppt", expr(
           "cast((cast(cnt as decimal(38,0)) * 1000000000000) div " +
             "(cast(cl as decimal(38,0)) * cast(cr as decimal(38,0))) as long)"))
-      val top1 = pin(scored
+      val top1 = cut(scored
         .orderBy(col("score_ppt").desc, col("lhs"), col("rhs")).limit(1))
       rules = rules :+ top1.select(lit(i).as("step"), col("lhs"), col("rhs"),
         col("cnt"), col("score_ppt"))
@@ -1246,7 +1215,7 @@ object TextAnalysis {
       // bpeTrainLoop's, which encode reuses) — eagerly pinning it
       // was a whole wasted replace+checkpoint pass (r16)
       if (i < steps)
-        sym = pin(sym
+        sym = cut(sym
           .crossJoin(broadcast(top1.select(col("lhs").as("m_lhs"),
             col("rhs").as("m_rhs"))))
           .withColumn("s", org.apache.spark.sql.functions.replace(col("s"),
@@ -1366,12 +1335,9 @@ object TextAnalysis {
     */
   private def ulmViterbi(words: DataFrame, costs: DataFrame)
       : (DataFrame, DataFrame) = {
-    def pin(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    val pieces = pin(costs.withColumnRenamed("piece", "vp"))
+    val pieces = cut(costs.withColumnRenamed("piece", "vp"))
     val base = words.select(col("w"), length(col("w")).as("len"))
-    var dp = pin(base.select(col("w"), col("len"), lit(0).as("pos"),
+    var dp = cut(base.select(col("w"), col("len"), lit(0).as("pos"),
       lit(0L).as("cost"), lit(0).as("bp")))
     var r = 0
     var done = false
@@ -1387,7 +1353,7 @@ object TextAnalysis {
         .join(broadcast(pieces), col("piece") === col("vp"))
         .select(col("w"), col("len"), col("pos"),
           (col("cost") + col("pcost")).as("cost"), col("L").cast("int").as("bp"))
-      val next = pin(dp.unionAll(cand)
+      val next = cut(dp.unionAll(cand)
         .groupBy(col("w"), col("len"), col("pos"))
         .agg(min(struct(col("cost"),
           (lit(WpMaxPiece) - col("bp")).as("nb"), col("bp"))).as("m"))
@@ -1401,7 +1367,7 @@ object TextAnalysis {
       .select(col("w"), col("len"), col("cost"))
     var used = dp.select(col("w"), expr("substring(w, 1, 0)").as("piece"))
       .limit(0)
-    var bt = pin(dp.filter(col("pos") === col("len"))
+    var bt = cut(dp.filter(col("pos") === col("len"))
       .select(col("w"), col("pos"), col("bp")))
     var r2 = 0
     var btDone = false
@@ -1410,9 +1376,9 @@ object TextAnalysis {
       val act = bt.filter(col("pos") > 0)
       if (act.limit(1).count() == 0) btDone = true
       else {
-        used = pin(used.unionAll(act.select(col("w"),
+        used = cut(used.unionAll(act.select(col("w"),
           expr("substring(w, pos - bp + 1, bp)").as("piece"))))
-        bt = pin(act.select(col("w"), (col("pos") - col("bp")).as("pos"))
+        bt = cut(act.select(col("w"), (col("pos") - col("bp")).as("pos"))
           .join(dp.select(col("w"), col("pos"), col("bp")), Seq("w", "pos")))
       }
     }
@@ -1514,7 +1480,7 @@ object TextAnalysis {
     * the encoded word table + one partial-agg rollup.
     */
   def qWordpiece(s: SparkSession, dir: String): DataFrame =
-    wpEncMemo.getOrElseUpdate((s, dir), memoCutTok(qWordpiecePlan(s, dir)))
+    shared("qWordpiece", s, dir)(cut(qWordpiecePlan(s, dir)))
 
   private def qWordpiecePlan(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
@@ -1546,22 +1512,13 @@ object TextAnalysis {
     * exact integer ppm.
     */
   def qFertility(s: SparkSession, dir: String): DataFrame =
-    fertMemo.getOrElseUpdate((s, dir), memoCutTok(qFertilityPlan(s, dir)))
+    shared("qFertility", s, dir)(cut(qFertilityPlan(s, dir)))
 
   /** Memoized final frames of the fertility / wordpiece rungs — both
     * are re-consumed verbatim by [[qTokenizerRace]] (tiny per-source
     * tables; the cut stops the race re-running the encode joins and,
     * for wordpiece, the greedy MaxMatch loop).
     */
-  private val fertMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-  private val wpEncMemo = graft.MemoRegistry.register(
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame])
-
-  private def memoCutTok(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
   private def qFertilityPlan(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val sym = bpeBase(s, dir)._2
@@ -1805,11 +1762,10 @@ object TextAnalysis {
     val tok = docs
       .select(col("source"), explode(tokens(col("text"))).as("t"))
       .select(col("source"), tokenHash(col("t")).as("h"))
-      .localCheckpoint()
+      .transform(cut)
     val srcCnt = tok.groupBy(col("source"), col("h"))
       .agg(count(lit(1)).as("c_sh"))
-    val corpCnt = tok.groupBy(col("h")).agg(count(lit(1)).as("c_h"))
-      .localCheckpoint()
+    val corpCnt = cut(tok.groupBy(col("h")).agg(count(lit(1)).as("c_h")))
     val nTotal = tok.count()
     val totalPcPpb = corpCnt
       .agg(sum(expr(s"c_h * 1000000000 div ${nTotal}L"))).head.getLong(0)

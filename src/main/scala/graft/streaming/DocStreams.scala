@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.MemoRegistry.{cut, named}
 import graft.extract.{Merge, Warehouse, WarehouseBackend}
 import graft.operators.Curation
 
@@ -89,18 +90,6 @@ object DocStreams {
   val DefaultLookupPushdownMax = 100000
   def lookupPushdownMax(spark: SparkSession): Int =
     spark.conf.get(LookupPushdownConf, DefaultLookupPushdownMax.toString).toInt
-
-  /** Lineage cut for foreachBatch intermediates (r6 verdict #5,
-    * mirroring Dedup.connectedComponents): RELIABLE checkpoints —
-    * HDFS-durable, executor-loss-safe — whenever the context has a
-    * checkpoint dir configured; executor-memory localCheckpoint as
-    * the single-box fallback. On a cluster the difference is
-    * re-doing a lost batch's work inside the streaming retry (safe
-    * but wasteful: replay + idempotent upserts) vs not losing it.
-    */
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
 
   /** Key-hash partition column for [[upsertPartitioned]] /
     * the streaming indexes: int-typed (hive partition-value
@@ -396,17 +385,6 @@ object DocStreams {
     }
   }
 
-  /** Runs `body` with `name` as the Spark job description of every job
-    * it starts, so listeners and the UI can tell a micro-batch's steps
-    * apart; the previous description is restored afterwards.
-    */
-  private def step[T](spark: SparkSession, name: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(name)
-    try body finally sc.setJobDescription(prev)
-  }
-
   /** Streaming incremental near-dup dedup — the production index
     * pattern: the warehouse keeps the MinHash BAND INDEX
     * (doc_id, band_id, band_hash) of every unique doc seen so far,
@@ -473,25 +451,25 @@ object DocStreams {
         // buckets — never by scanning the band index
         val batchIds = docs.select(col("doc_id"),
           bucketOf(col("doc_id"), nBuckets).as("id_bucket"))
-        val ik = step(spark, "ids")(keySet[Long](batchIds, "id_bucket", "doc_id"))
-        val (seen, idScan) = step(spark, "fresh")(
+        val ik = named(spark, "ids")(keySet[Long](batchIds, "id_bucket", "doc_id"))
+        val (seen, idScan) = named(spark, "fresh")(
           leveledLookup(wh, ref, idsTable, "id_bucket", "doc_id", ik, batchIds))
         val fresh = docs.select(col("doc_id"), col("text"))
           .join(seen.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        val bands = step(spark, "bands")(Dedup.minhashBands(Dedup.minhashSignatures(fresh))
+        val bands = named(spark, "bands")(Dedup.minhashBands(Dedup.minhashSignatures(fresh))
           .withColumn("bucket", bucketOf(col("band_hash"), nBuckets))
           .transform(cut))
         // band match vs the persisted index: L0 plus the L1 buckets
         // this batch's bands hash to, with the band-hash set pushed
         // down to parquet's row-group filters — the level that still
         // bounds the read when the band spread saturates the buckets
-        val (bk, (idx, idxScan)) = step(spark, "lookup") {
+        val (bk, (idx, idxScan)) = named(spark, "lookup") {
           val bk = keySet[String](bands, "bucket", "band_hash")
           (bk, leveledLookup(wh, ref, indexTable, "bucket", "band_hash", bk, bands))
         }
         // every (new, matched) pair, a fresh doc's match with its own
         // index rows included (see the WRITE shape above)
-        val pairs = step(spark, "dupes") {
+        val pairs = named(spark, "dupes") {
           val vsOld = bands.toDF("new_doc", "band_n", "hash_n", "bucket_n")
             .join(idx.toDF("old_doc", "band_o", "hash_o", "bucket_o"),
               col("band_n") === col("band_o") && col("hash_n") === col("hash_o"))
@@ -512,20 +490,20 @@ object DocStreams {
         // Both appends offer a count of the batch's own docs, which a
         // replay reproduces (fresh docs shrink once the sidecar holds
         // them)
-        val idxAppend = step(spark, "append index")(leveledAppend[String](wh, ref, indexTable,
+        val idxAppend = named(spark, "append index")(leveledAppend[String](wh, ref, indexTable,
           "bucket", "band_hash", Seq("doc_id", "band_id"),
           bands.join(broadcast(pairs.select(col("new_doc").as("doc_id"))), Seq("doc_id"), "left_anti"),
           ik.rows * Dedup.Bands))
         // the sidecar mirrors the index's doc set exactly: fresh
         // uniques only (dup docs stay unindexed so replays re-flag);
         // band 0 is one row per fresh doc
-        val idsAppend = step(spark, "append ids")(leveledAppend[Long](wh, ref, idsTable,
+        val idsAppend = named(spark, "append ids")(leveledAppend[Long](wh, ref, idsTable,
           "id_bucket", "doc_id", Seq("doc_id"),
           bands.filter(col("band_id") === 0)
             .select(col("doc_id"), bucketOf(col("doc_id"), nBuckets).as("id_bucket"))
             .join(broadcast(newDups), Seq("doc_id"), "left_anti"),
           ik.rows))
-        val verdictWrite = step(spark, "verdicts") {
+        val verdictWrite = named(spark, "verdicts") {
           val key = concat(col("new_doc").cast("string"), lit("#"), col("matched_doc").cast("string"))
           val verdicts = dupes.withColumn("dup_key", key)
             .withColumn("pbucket", bucketOf(col("dup_key"), nBuckets))

@@ -144,10 +144,16 @@ class OperatorsSpec extends AnyFunSuite {
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    val viaReliable = run()
-    assert(viaLocal == viaReliable)
-    assert(viaReliable == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
-      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
+    try {
+      val viaReliable = run()
+      assert(viaLocal == viaReliable)
+      assert(viaReliable == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+        10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L))
+    } finally {
+      spark.sparkContext.setCheckpointDir(null)
+      assert(spark.sparkContext.getCheckpointDir.isEmpty,
+        "checkpoint dir must clear so later tests stay in local mode")
+    }
   }
 
   test("LSH sweep: extra tables only add recall, extra planes only cut candidates") {

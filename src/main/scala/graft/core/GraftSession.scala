@@ -24,12 +24,6 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Session from YAML config (reference config.py:15-24 SparkConfig):
     * master may be any cluster URL — spark://, yarn, k8s:// — with
     * executor sizing and arbitrary properties passed through, so the
